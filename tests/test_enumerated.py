@@ -502,3 +502,39 @@ def test_orbit_perms_and_is_rep_memos_identical_and_bounded():
     got2 = [en._hnf_is_rep(lat, h6) for lat, h6 in rows]  # warm pass reads it
     want = [verdict(lat, h6) for lat, h6 in rows]
     assert got1 == want and got2 == want
+
+
+def test_orbit_perms_cache_evicts_oldest_and_skips_oversize():
+    """The orbit cache is FIFO: an insert past the bound evicts the
+    oldest entries, not the newest; a result larger than the whole bound
+    is returned uncached and leaves the cached entries in place."""
+    from tracy_matdb_spark.operators import enumerated as en
+
+    a, b, c, big = (1, 0, 1, 0, 0, 2), (1, 0, 1, 0, 0, 1), (1, 0, 2, 1, 1, 2), (1, 0, 1, 0, 0, 4)
+    old_max = en._ORBIT_PERMS_MAX_ELEMS
+    try:
+        en._ORBIT_PERMS_CACHE.clear()
+        en._ORBIT_PERMS_ELEMS[0] = 0
+        sizes = {}
+        for h in (a, b, c, big):
+            p, t, _ = en._orbit_perms(h, "fcc")
+            sizes[h] = p.size + t.size
+        # room for b + c but not a + b + c, and never for `big`
+        en._ORBIT_PERMS_MAX_ELEMS = sizes[b] + sizes[c] + min(sizes[a], sizes[b]) - 1
+        assert sizes[a] + sizes[b] + sizes[c] > en._ORBIT_PERMS_MAX_ELEMS
+        assert sizes[big] > en._ORBIT_PERMS_MAX_ELEMS
+        en._ORBIT_PERMS_CACHE.clear()
+        en._ORBIT_PERMS_ELEMS[0] = 0
+        for h in (a, b, c):
+            en._orbit_perms(h, "fcc")
+        assert list(en._ORBIT_PERMS_CACHE) == [(b, "fcc"), (c, "fcc")]
+        assert en._ORBIT_PERMS_ELEMS[0] == sizes[b] + sizes[c]
+
+        p, t, _ = en._orbit_perms(big, "fcc")
+        assert p.size + t.size == sizes[big]
+        assert list(en._ORBIT_PERMS_CACHE) == [(b, "fcc"), (c, "fcc")]
+        assert en._ORBIT_PERMS_ELEMS[0] == sizes[b] + sizes[c]
+    finally:
+        en._ORBIT_PERMS_MAX_ELEMS = old_max
+        en._ORBIT_PERMS_CACHE.clear()
+        en._ORBIT_PERMS_ELEMS[0] = 0

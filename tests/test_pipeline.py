@@ -4,7 +4,11 @@ from __future__ import annotations
 
 import os
 
-from tracy_matdb_spark.plans.pipeline import Pipeline
+import pytest
+from pyspark.sql import functions as F
+
+from tracy_matdb_spark.frames import literal_frame
+from tracy_matdb_spark.plans.pipeline import Pipeline, builtin_seeds
 from tracy_matdb_spark.plans.spec import expand_grid, read_spec, special_values
 
 SPEC = {
@@ -140,3 +144,101 @@ def test_finalize_snapshot_versions(spark, tmp_path):
     assert P.list_versions(os.path.join(d, "final")) == [1, 2]
     # dfilter narrows the snapshot
     assert p.finalize(spark, dfilter="nomatch*").count() == 0
+
+
+# distortion over a sigma grid, chained into substitution and vacancy
+# (the materials_build workload's shape at a few configs per seed)
+CHAINED_SPEC = {
+    "ran_seed": 42,
+    "databases": {
+        "alloy": {
+            "steps": [
+                {"type": "distortion", "name": "dist", "params": {"nconfigs": 4, "sigma*": [0.02, 0.05]}},
+                {"type": "substitution", "name": "sub", "params": {"nconfigs": 3}},
+                {"type": "vacancy", "name": "vac"},
+            ]
+        }
+    },
+}
+
+# recorded from the catalog written when every step re-ran its lineage
+# from Python-built seed frames: group_name -> (rows, group_hash, content
+# fingerprint = bit_xor of xxhash64 over every column, by column name)
+CHAINED_GOLDEN = {
+    "dist-sigma-0.02": (12, 1082554893079044268, 3089206765250482047),
+    "dist-sigma-0.05": (12, 763021394379604615, -8788927857925905575),
+    "sub": (72, 751803135064375510, 3504731529253978749),
+    "vac": (56, 362008172139851565, -7006098242347063912),
+}
+
+
+def test_chained_setup_matches_golden(spark, tmp_path):
+    p = Pipeline(CHAINED_SPEC, str(tmp_path / "catalog"))
+    p.setup(spark)
+    hashes = {r["group_name"]: (r["n"], r["group_hash"]) for r in p.group_hashes(spark).collect()}
+    got = {}
+    for name, (n, h) in hashes.items():
+        group = spark.read.parquet(os.path.join(p.out_dir, "configurations", "database=alloy", f"group_name={name}"))
+        cols = ", ".join(sorted(group.columns))
+        got[name] = (n, h, group.select(F.expr(f"bit_xor(xxhash64({cols}))")).first()[0])
+    assert got == CHAINED_GOLDEN
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_setup_and_literal_frames_scan_no_python_rdd(spark, tmp_path, monkeypatch):
+    """Classic createDataFrame(list) scans an ExistingRDD whose tasks run a
+    Python worker; nothing setup writes may carry one."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans = []
+    write_parquet = DataFrameWriter.parquet
+
+    def recording_parquet(self, path, *args, **kwargs):
+        plans.append(_plan(self._df))
+        return write_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording_parquet)
+    Pipeline(CHAINED_SPEC, str(tmp_path / "catalog")).setup(spark)
+    assert len(plans) == 5  # four groups + the groups table
+    plans += [_plan(builtin_seeds(spark)), _plan(literal_frame(spark, [("a", 1)], "s string, n int"))]
+    for plan in plans:
+        assert "ExistingRDD" not in plan and "applySchemaToPythonRDD" not in plan, plan
+
+
+@pytest.mark.parametrize("partitions", [1, 3])
+def test_literal_frame_matches_create_dataframe(spark, partitions):
+    rows = [("fcc", 4, 2.025, True), ("bcc", None, -1.6, False), ("sc", 1, 3.25, None)]
+    schema = "seed_id string, n_atoms int, b00 double, ok boolean"
+    df = literal_frame(spark, rows, schema, partitions=partitions)
+    ref = spark.createDataFrame(rows, schema)
+    assert df.dtypes == ref.dtypes
+    assert df.collect() == ref.collect()
+    assert df.rdd.getNumPartitions() == partitions
+    empty = literal_frame(spark, [], schema)
+    assert empty.dtypes == ref.dtypes and empty.count() == 0
+
+
+def test_unchained_step_leaves_seeds_to_the_next_step(spark, tmp_path):
+    """chain: False keeps the step's output out of the next step's seeds:
+    the vacancy step enumerates the built-in seed cells (4, 2 and 1 atoms
+    -> 6 + 1 + 0 pairs), not the 15 distorted configs."""
+    spec = {
+        "ran_seed": 3,
+        "databases": {
+            "d": {
+                "steps": [
+                    {"type": "distortion", "name": "dist", "params": {"nconfigs": 5}, "chain": False},
+                    {"type": "vacancy", "name": "vac"},
+                ]
+            }
+        },
+    }
+    p = Pipeline(spec, str(tmp_path / "catalog"))
+    p.setup(spark)
+    status = {r["group_name"]: r["n_configs"] for r in p.status(spark).collect()}
+    assert status == {"dist": 15, "vac": 7}
+    vac = spark.read.parquet(os.path.join(p.out_dir, "configurations", "database=d", "group_name=vac"))
+    assert {r["seed_id"] for r in vac.select("seed_id").distinct().collect()} == {"fcc", "bcc"}

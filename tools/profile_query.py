@@ -5,8 +5,9 @@ For each named query: 2 warmups, then a timed rep split into
   plan_s   — force executedPlan (analysis/optimization/physical planning)
   exec_s   — noop materialization wall time
 and, from the status tracker, the jobs/stages/tasks the rep ran with
-summed task time — exec_s >> task_s/32 means scheduling/stragglers,
-not work. Usage: python tools/profile_query.py <sf_dir> <query> [...]
+summed task time — exec_s >> task_s / n, with n the session's cores
+(local[n]), means scheduling/stragglers, not work.
+Usage: python tools/profile_query.py <sf_dir> <query> [...]
 """
 
 from __future__ import annotations

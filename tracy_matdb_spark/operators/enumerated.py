@@ -671,15 +671,13 @@ def _orbit_perms(h: tuple[int, ...], lattice: str):
                 tperms.append(tr)
     out = (np.asarray(perms, dtype=np.int64), np.asarray(tperms, dtype=np.int64), n)
     elems = out[0].size + out[1].size
-    while (
-        _ORBIT_PERMS_CACHE
-        and _ORBIT_PERMS_ELEMS[0] + elems > _ORBIT_PERMS_MAX_ELEMS
-    ):
-        _, old = _ORBIT_PERMS_CACHE.popitem()
+    if elems > _ORBIT_PERMS_MAX_ELEMS:
+        return out  # never cacheable: keep what is cached
+    while _ORBIT_PERMS_ELEMS[0] + elems > _ORBIT_PERMS_MAX_ELEMS:
+        old = _ORBIT_PERMS_CACHE.pop(next(iter(_ORBIT_PERMS_CACHE)))  # oldest first
         _ORBIT_PERMS_ELEMS[0] -= old[0].size + old[1].size
-    if elems <= _ORBIT_PERMS_MAX_ELEMS:
-        _ORBIT_PERMS_CACHE[key] = out
-        _ORBIT_PERMS_ELEMS[0] += elems
+    _ORBIT_PERMS_CACHE[key] = out
+    _ORBIT_PERMS_ELEMS[0] += elems
     return out
 
 

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tracy_matdb_spark.frames import literal_frame
+
 # -- shared literal seed lattices (the reference's seed POSCARs, e.g.
 #    tests/Pd/POSCAR; exact decimal literals so both engines parse the
 #    same doubles) --
@@ -78,7 +80,7 @@ def _seeds_df(spark: SparkSession) -> DataFrame:
     rows = [(sid, *[v for row in cell for v in row]) for sid, cell in SEED_CELLS]
     cols = ["seed_id"] + [f"b{j}{k}" for j in range(3) for k in range(3)]
     schema = "seed_id string, " + ", ".join(f"{c} double" for c in cols[1:])
-    return spark.createDataFrame(rows, schema)
+    return literal_frame(spark, rows, schema, partitions=len(rows))  # one task per seed, see distortion_transform
 
 
 # ---------------------------------------------------------------------------
@@ -204,7 +206,7 @@ MAX_N = 16
 
 
 def vacancy_enumerate(spark: SparkSession) -> DataFrame:
-    seeds = spark.createDataFrame(VACANCY_SEEDS, "seed_id string, n_atoms int")
+    seeds = literal_frame(spark, VACANCY_SEEDS, "seed_id string, n_atoms int")
     pairs = (
         seeds.withColumn("i", F.explode(F.sequence(F.lit(0), F.col("n_atoms") - 2)))
         .withColumn("j", F.explode(F.sequence(F.col("i") + 1, F.col("n_atoms") - 1)))
@@ -310,7 +312,7 @@ SUB_FRAC_A = 0.5
 def substitution_generate(spark: SparkSession) -> DataFrame:
     from pyspark.sql import Window
 
-    seeds = spark.createDataFrame(SUB_SEEDS, "seed_id string, n_atoms int")
+    seeds = literal_frame(spark, SUB_SEEDS, "seed_id string, n_atoms int")
     atoms = (
         seeds.withColumn("cid", F.explode(F.sequence(F.lit(1), F.lit(SUB_NCONFIGS))))
         .withColumn("atom", F.explode(F.sequence(F.lit(0), F.col("n_atoms") - 1)))

@@ -4,7 +4,9 @@ Maps SURVEY.md §3.1 onto Spark:
 - Controller (matdb/database/__init__.py:1585-2007)  -> Pipeline: parses a
   spec dict (plans/spec.py), owns the output catalog directory.
 - Database (…:1159-1492) -> ordered list of steps with dependency gating:
-  step k+1's seeds are step k's result set (`prev.rset`, …:385-394).
+  step k+1's seeds are step k's result set (`prev.rset`, …:385-394),
+  read back from the group directories step k wrote, so no step's
+  lineage is re-run by a later one.
 - Group (…:51-1105)      -> one generator transformation per parameter-grid
   combo, output written as Parquet partitioned by (database, group_name) —
   the partition layout *is* the catalog, so `find`/`status` queries prune
@@ -27,6 +29,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tracy_matdb_spark.frames import literal_frame
 from tracy_matdb_spark.operators import generators as G
 from tracy_matdb_spark.operators.split import assign_split
 from tracy_matdb_spark.plans import provenance as P
@@ -42,7 +45,7 @@ def builtin_seeds(spark: SparkSession) -> DataFrame:
     schema = "seed_id string, n_atoms int, " + ", ".join(
         f"b{j}{k} double" for j in range(3) for k in range(3)
     )
-    return spark.createDataFrame(rows, schema)
+    return literal_frame(spark, rows, schema, partitions=len(rows))  # one task per seed, see distortion_transform
 
 
 def _with_identity(df: DataFrame, database: str, group_name: str) -> DataFrame:
@@ -94,12 +97,18 @@ class Pipeline:
 
     def setup(self, spark: SparkSession) -> None:
         """Run every database's steps (gated, grid-expanded) and materialize
-        the configurations catalog."""
+        the configurations catalog.
+
+        A chained step's seeds are read back from the group directories
+        the previous step wrote — its result set as stored, the
+        reference's `prev.rset` — so every generator runs exactly once
+        (seeding from the lazy union of the step's DataFrames would re-run
+        the whole lineage inside each later write)."""
         cfg_path = os.path.join(self.out_dir, "configurations")
         for db_name, db_spec in self.spec.get("databases", {}).items():
             seeds = builtin_seeds(spark)
             for step in db_spec.get("steps", []):
-                step_outputs = []
+                group_dirs = []
                 for suffix, params in expand_grid(step.get("params", {}), seed=self.ran_seed):
                     name, out = self._run_step(spark, seeds, step, suffix, params, db_name)
                     group_dir = os.path.join(cfg_path, f"database={db_name}", f"group_name={name}")
@@ -127,23 +136,21 @@ class Pipeline:
                         "splittable": bool(step.get("splittable", True)),
                     }
                     self.groups.append(group_row)
-                    step_outputs.append((name, out))
-                # dependency chaining: the union of this step's outputs seeds
-                # the next step (prev.rset semantics). Generator outputs carry
-                # c00..c22 cells -> renamed to b** for the next generator.
-                if step_outputs and step.get("chain", True):
-                    nxt = step_outputs[0][1]
-                    for _, o in step_outputs[1:]:
-                        nxt = nxt.unionByName(o)
-                    if "c00" in nxt.columns:
-                        renames = {f"c{j}{k}": f"b{j}{k}" for j in range(3) for k in range(3)}
-                        for src, dst in renames.items():
-                            nxt = nxt.withColumnRenamed(src, dst)
-                    if set(CANON_SEED_COLS) <= set(nxt.columns):
-                        seeds = nxt.select(
+                    group_dirs.append(group_dir)
+                # dependency chaining: this step's written groups seed the
+                # next step. Generator outputs carry c00..c22 cells ->
+                # renamed to b** for the next generator; an output without
+                # a cell (substitution) leaves the seeds as they were.
+                if group_dirs and step.get("chain", True):
+                    rset = spark.read.parquet(*group_dirs).withColumnsRenamed(
+                        {f"c{j}{k}": f"b{j}{k}" for j in range(3) for k in range(3)}
+                    )
+                    if set(CANON_SEED_COLS) <= set(rset.columns):
+                        seeds = rset.select(
                             F.col("uuid").alias("seed_id"), *[c for c in CANON_SEED_COLS if c != "seed_id"]
                         )
-        groups_df = spark.createDataFrame(
+        groups_df = literal_frame(
+            spark,
             [tuple(g.values()) for g in self.groups],
             "database string, group_name string, group_type string, params_json string, trainable boolean, splittable boolean",
         )

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tracy_matdb_spark.catalog import load
+from tracy_matdb_spark.frames import literal_frame
 from tracy_matdb_spark.functions.prng import hash60
 from tracy_matdb_spark.operators import generators
 from tracy_matdb_spark.operators.aflow_dsl import aflow_query
@@ -206,7 +207,7 @@ def _hessian_checksum_literals() -> str:
 def hessian_eigen(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tracy_matdb_spark.operators.hessian import eigen_explode
 
-    seeds = spark.createDataFrame(HESS_SEEDS, "seed_id string, n_atoms int")
+    seeds = literal_frame(spark, HESS_SEEDS, "seed_id string, n_atoms int")
     ex = eigen_explode(seeds).select(
         "seed_id",
         "n",
@@ -253,7 +254,7 @@ HESS_EXACT_SEEDS = [("fcc", 2), ("bcc", 3), ("hcp", 4)]
 def hessian_eigen_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tracy_matdb_spark.operators.hessian import eigen_exact_explode
 
-    seeds = spark.createDataFrame(HESS_EXACT_SEEDS, "seed_id string, n_atoms int")
+    seeds = literal_frame(spark, HESS_EXACT_SEEDS, "seed_id string, n_atoms int")
     return eigen_exact_explode(seeds).orderBy("seed_id", "eig_index")
 
 

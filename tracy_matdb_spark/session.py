@@ -25,7 +25,7 @@ def get_session(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     # must run BEFORE the JVM launches: the typed-state streaming
     # protocol imports google.protobuf inside the Python WORKERS, which
     # inherit the JVM's environment — so the vendored runtime has to be
