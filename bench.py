@@ -8,7 +8,8 @@ Measurement discipline (round-9 rework — the bench's own noise had
 grown larger than every per-query delta the rounds claimed):
 
 * **Load gate with settle-wait.** The 1-min load average is sampled
-  BEFORE our own session spins up 32 threads; if it exceeds 1.0 the
+  BEFORE our own session spins up its task threads (one per core,
+  $SPARK_GRAFT_CPUS or every usable core); if it exceeds 1.0 the
   runner sleeps in 10 s steps (up to $SPARK_GRAFT_BENCH_SETTLE_S,
   default 180) until it settles — on this box the residual load from a
   just-finished pytest/Spark run takes 60-90 s to decay and inflates
@@ -149,9 +150,10 @@ def _calib_total(probe_times: dict) -> float:
 def _contention_guard() -> tuple[bool, float, float]:
     """Detect machine contention at bench start. Returns (contended,
     load1-at-start, settle-wait-seconds). The load MUST be sampled
-    before the Spark session spins up 32 threads of our own; the
-    verdict is printed to stderr AND recorded in the output JSON so a
-    noisy artifact is distinguishable from a clean one without a rerun.
+    before the Spark session spins up its own task threads (one per
+    core it runs on); the verdict is printed to stderr AND recorded in
+    the output JSON so a noisy artifact is distinguishable from a clean
+    one without a rerun.
 
     Signals: other JVMs already running (the round-2/3 recorded benches
     were polluted by concurrent Spark work by +15-50%), and a 1-minute

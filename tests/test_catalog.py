@@ -109,3 +109,16 @@ def test_cached_relation_results_match_fresh_read(spark):
     got = {r["o_orderkey"] for r in cached.orderBy("o_orderkey").limit(50).collect()}
     want = {r["o_orderkey"] for r in fresh.orderBy("o_orderkey").limit(50).collect()}
     assert got == want
+
+
+def test_load_events_leaves_session_conf_unchanged(spark):
+    """Reading events must not change the caller's session settings;
+    the nanos-as-long read setting is pinned by get_session instead."""
+    from tracy_matdb_spark.catalog import load_events
+
+    session = spark.newSession()
+    session.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    before = dict(session.conf.getAll)
+    load_events(session, SF_SMOKE)
+    assert dict(session.conf.getAll) == before
+    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"

@@ -57,6 +57,8 @@ def test_build_py_ships_protobuf_shim(tmp_path):
                 got.add(rel)
     missing = want - got
     assert not missing, f"shim files absent from build_py output: {sorted(missing)}"
+    # ensure_protobuf tells an installed shim from a genuine protobuf by it
+    assert os.path.isfile(os.path.join(build_lib, SHIM_REL, "google", "protobuf", "TRACY_MATDB_SHIM"))
     # the engine itself must be there too, not just the data files
     assert os.path.exists(
         os.path.join(build_lib, "tracy_matdb_spark", "vendor", "__init__.py")

@@ -242,3 +242,67 @@ def test_unchained_step_leaves_seeds_to_the_next_step(spark, tmp_path):
     assert status == {"dist": 15, "vac": 7}
     vac = spark.read.parquet(os.path.join(p.out_dir, "configurations", "database=d", "group_name=vac"))
     assert {r["seed_id"] for r in vac.select("seed_id").distinct().collect()} == {"fcc", "bcc"}
+
+
+def test_failing_group_is_raised_and_groups_manifest_not_written(spark, tmp_path):
+    spec = {
+        "databases": {
+            "d": {
+                "steps": [
+                    {"type": "distortion", "name": "dist", "params": {"nconfigs": 2, "sigma*": [0.01, 0.02, 0.03]}},
+                    {"type": "bogus"},
+                ]
+            }
+        },
+    }
+    p = Pipeline(spec, str(tmp_path / "catalog"))
+    with pytest.raises(ValueError, match="unknown step type"):
+        p.setup(spark)
+    assert not os.path.exists(os.path.join(p.out_dir, "groups", "_manifest.json"))
+
+
+SCHEDULE_SPEC = {
+    "ran_seed": 9,
+    "databases": {
+        "b": {
+            "steps": [
+                {"type": "distortion", "name": "dist", "params": {"nconfigs": 2, "sigma*": [0.01, 0.02, 0.03]}},
+                {"type": "substitution", "name": "sub", "params": {"nconfigs": 2}, "chain": False},
+                {"type": "vacancy", "name": "vac"},
+            ]
+        },
+        "a": {"steps": [{"type": "vacancy", "name": "vac"}, {"type": "manual", "name": "man"}]},
+    },
+}
+SCHEDULE_ORDER = [
+    ("b", "dist-sigma-0.01"), ("b", "dist-sigma-0.02"), ("b", "dist-sigma-0.03"), ("b", "sub"), ("b", "vac"),
+    ("a", "vac"), ("a", "man"),
+]
+
+
+def test_groups_table_lists_groups_in_spec_order(spark, tmp_path):
+    p = Pipeline(SCHEDULE_SPEC, str(tmp_path / "catalog"))
+    p.setup(spark)
+    table = spark.read.parquet(os.path.join(p.out_dir, "groups")).collect()
+    assert [(r["database"], r["group_name"]) for r in table] == SCHEDULE_ORDER
+    assert [(g["database"], g["group_name"]) for g in p.groups] == SCHEDULE_ORDER
+    status = {(r["database"], r["group_name"]): r["n_configs"] for r in p.status(spark).collect()}
+    # b/vac is seeded by the three distortion groups (18 configs: 2 per
+    # seed cell and sigma), a/vac by the built-in seed cells
+    assert status[("b", "vac")] == 3 * 2 * 7 and status[("a", "vac")] == 7
+
+
+def test_setup_jobs_stay_in_the_callers_job_group(spark, tmp_path):
+    """Pool threads start with empty JVM local properties; setup's jobs
+    must still be attributed to (and cancellable through) the caller's
+    job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup("pipeline-setup-test", "setup under a job group")
+    try:
+        p = Pipeline(CHAINED_SPEC, str(tmp_path / "catalog"))
+        p.setup(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("pipeline-setup-test")
+    assert len(jobs) >= len(p.groups) + 1  # one write per group, plus the groups table

@@ -209,3 +209,44 @@ def test_install_pth_hook_rewrites_stale_and_respects_opt_out(tmp_path, monkeypa
     monkeypatch.setenv("TRACY_NO_PTH_HOOK", "1")
     assert vendor.install_pth_hook() is None
     assert not os.path.exists(pth)
+
+
+def test_hook_to_a_foreign_shim_copy_is_rewritten(tmp_path):
+    """A hook left by another checkout (a worktree, a scratch copy) makes
+    every fresh process import that checkout's shim. ensure_protobuf must
+    recognise it as a shim, not as a genuine install, and point the hook
+    at this checkout's copy."""
+    import os
+    import shutil
+    import subprocess
+    import sys
+
+    from tracy_matdb_spark import vendor
+
+    foreign = tmp_path / "other-checkout" / "protobuf_shim"
+    shutil.copytree(vendor.SHIM_DIR, foreign)
+    site_dir = tmp_path / "site-packages"
+    site_dir.mkdir()
+    pth = site_dir / vendor.PTH_NAME
+    pth.write_text(f"{foreign}\n", encoding="utf-8")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    # -S: no real site-packages, so the planted hook is the only way in
+    code = (
+        "import site, sys\n"
+        f"sys.path.insert(0, {root!r})\n"
+        f"site.addsitedir({str(site_dir)!r})\n"
+        "import google.protobuf as gp\n"
+        "from tracy_matdb_spark import vendor\n"
+        f"vendor._site_dirs = lambda: [{str(site_dir)!r}]\n"
+        "print('ORIGIN', gp.__path__[0])\n"
+        "print('MODE', vendor.ensure_protobuf())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k not in ("PYTHONPATH", "TRACY_NO_PTH_HOOK")}
+    proc = subprocess.run(
+        [sys.executable, "-S", "-c", code], cwd=tmp_path, env=env, capture_output=True, text=True, timeout=120
+    )
+    assert proc.returncode == 0, proc.stderr
+    out = dict(line.split(" ", 1) for line in proc.stdout.splitlines() if line.startswith(("ORIGIN ", "MODE ")))
+    assert out["ORIGIN"].startswith(str(foreign))
+    assert out["MODE"] == "shim"
+    assert pth.read_text(encoding="utf-8").strip() == vendor.SHIM_DIR

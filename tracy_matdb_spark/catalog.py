@@ -187,7 +187,9 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Handles both generations of the driver's testdata: parquet
     TIMESTAMP(NANOS) — which Spark's vectorized reader only accepts as
-    raw BIGINT via `nanosAsLong` — and plain TIMESTAMP(MICROS)/NTZ.
+    raw BIGINT via `spark.sql.legacy.parquet.nanosAsLong`, pinned by
+    `session.get_session` (setting it here would change the caller's
+    session) — and plain TIMESTAMP(MICROS)/NTZ.
     Session timezone is UTC (session.py) so NTZ -> epoch conversion
     matches DuckDB's naive-UTC epoch_us(). The final select pins ONE
     column order for both generations so positional consumers can't
@@ -195,7 +197,6 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = _relation(spark, table_path(sf_dir, "events"))
     if isinstance(df.schema["ts"].dataType, T.LongType):
         df = df.withColumnRenamed("ts", "ts_ns").withColumn(

@@ -12,6 +12,11 @@ Maps SURVEY.md §3.1 onto Spark:
   the partition layout *is* the catalog, so `find`/`status` queries prune
   partitions instead of walking directory trees.
 
+The reference runs each group as its own array job, gated only on the
+steps it depends on (`isteps`, …:1304-1316). `setup` does the same on one
+driver: each group's build and write is a task on a thread pool, and a
+task waits only for the step its seeds come from (see `Pipeline.setup`).
+
 State (the reference's folders/pkl files) becomes tables:
     configurations/  database=…/group_name=…/part-*.parquet
     groups.parquet   one row per group instance (uuid, params, hash)
@@ -24,10 +29,12 @@ from __future__ import annotations
 import json
 import os
 import re
+from concurrent.futures import FIRST_EXCEPTION, Future, ThreadPoolExecutor, wait
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from tracy_matdb_spark.frames import literal_frame
 from tracy_matdb_spark.operators import generators as G
@@ -36,6 +43,7 @@ from tracy_matdb_spark.plans import provenance as P
 from tracy_matdb_spark.plans.spec import expand_grid
 
 CANON_SEED_COLS = ["seed_id", "n_atoms"] + [f"b{j}{k}" for j in range(3) for k in range(3)]
+_CELL_TO_SEED = {f"c{j}{k}": f"b{j}{k}" for j in range(3) for k in range(3)}
 
 
 def builtin_seeds(spark: SparkSession) -> DataFrame:
@@ -55,6 +63,31 @@ def _with_identity(df: DataFrame, database: str, group_name: str) -> DataFrame:
     )
 
 
+def _group_name(step: dict, suffix: str) -> str:
+    return step.get("name", step["type"]) + (f"-{suffix}" if suffix else "")
+
+
+def _results(futures: list[Future]) -> list:
+    """Results of `futures` in order. The first failure is raised as soon
+    as it happens, not after every other future is done."""
+    done, _ = wait(futures, return_when=FIRST_EXCEPTION)
+    for f in futures:
+        if f in done:
+            f.result()
+    return [f.result() for f in futures]
+
+
+def _next_seeds(spark: SparkSession, built: list[Future], writes: list[Future], seeds: Future) -> DataFrame:
+    """Seeds after a chained step. Generator outputs carry c00..c22 cells,
+    renamed to b** for the next generator; an output without a cell
+    (substitution) leaves the seeds as they were."""
+    schema = _results(built)[0]  # grid siblings write one schema
+    if not set(CANON_SEED_COLS) <= {_CELL_TO_SEED.get(c, c) for c in schema.fieldNames()}:
+        return seeds.result()
+    rset = spark.read.schema(schema).parquet(*_results(writes)).withColumnsRenamed(_CELL_TO_SEED)
+    return rset.select(F.col("uuid").alias("seed_id"), *[c for c in CANON_SEED_COLS if c != "seed_id"])
+
+
 class Pipeline:
     """Spec-driven pipeline over generator transformations."""
 
@@ -69,7 +102,7 @@ class Pipeline:
     def _run_step(self, spark: SparkSession, seeds: DataFrame, step: dict, suffix: str, params: dict,
                   database: str) -> tuple[str, DataFrame]:
         kind = step["type"]
-        name = step.get("name", kind) + (f"-{suffix}" if suffix else "")
+        name = _group_name(step, suffix)
         nconfigs = int(params.get("nconfigs", 10))
         if kind == "manual":
             out = seeds.select(
@@ -95,73 +128,123 @@ class Pipeline:
         out = apply_transforms(out, step.get("transforms"))
         return name, _with_identity(out, database, name)
 
-    def setup(self, spark: SparkSession) -> None:
-        """Run every database's steps (gated, grid-expanded) and materialize
-        the configurations catalog.
+    def _group_dir(self, database: str, name: str) -> str:
+        return os.path.join(self.out_dir, "configurations", f"database={database}", f"group_name={name}")
 
-        A chained step's seeds are read back from the group directories
-        the previous step wrote — its result set as stored, the
-        reference's `prev.rset` — so every generator runs exactly once
-        (seeding from the lazy union of the step's DataFrames would re-run
-        the whole lineage inside each later write)."""
-        cfg_path = os.path.join(self.out_dir, "configurations")
-        for db_name, db_spec in self.spec.get("databases", {}).items():
-            seeds = builtin_seeds(spark)
-            for step in db_spec.get("steps", []):
-                group_dirs = []
-                for suffix, params in expand_grid(step.get("params", {}), seed=self.ran_seed):
-                    name, out = self._run_step(spark, seeds, step, suffix, params, db_name)
-                    group_dir = os.path.join(cfg_path, f"database={db_name}", f"group_name={name}")
-                    # the partition directories carry database/group_name;
-                    # storing them again as data columns would shadow the
-                    # partition columns on read
-                    out.drop("database", "group_name").write.mode("overwrite").parquet(group_dir)
-                    # provenance sidecar per group write (dbcat semantics,
-                    # matdb/utility.py:933-983)
-                    P.write_manifest(
-                        group_dir,
-                        sources=[],
-                        database=db_name,
-                        group_name=name,
-                        group_type=step["type"],
-                        params=params,
-                        ran_seed=self.ran_seed,
-                    )
-                    group_row = {
-                        "database": db_name,
-                        "group_name": name,
-                        "group_type": step["type"],
-                        "params_json": json.dumps(params, sort_keys=True),
-                        "trainable": bool(step.get("trainable", True)),
-                        "splittable": bool(step.get("splittable", True)),
-                    }
-                    self.groups.append(group_row)
-                    group_dirs.append(group_dir)
-                # dependency chaining: this step's written groups seed the
-                # next step. Generator outputs carry c00..c22 cells ->
-                # renamed to b** for the next generator; an output without
-                # a cell (substitution) leaves the seeds as they were.
-                if group_dirs and step.get("chain", True):
-                    rset = spark.read.parquet(*group_dirs).withColumnsRenamed(
-                        {f"c{j}{k}": f"b{j}{k}" for j in range(3) for k in range(3)}
-                    )
-                    if set(CANON_SEED_COLS) <= set(rset.columns):
-                        seeds = rset.select(
-                            F.col("uuid").alias("seed_id"), *[c for c in CANON_SEED_COLS if c != "seed_id"]
-                        )
+    def _write_group(self, spark: SparkSession, seeds: Future, step: dict, suffix: str, params: dict,
+                     database: str, built: Future) -> str:
+        """Build, write and manifest one group; returns its directory.
+        `built` gets the schema to be written as soon as the DataFrame is
+        built, so the next step's seeds are known before the write ends."""
+        try:
+            name, out = self._run_step(spark, seeds.result(), step, suffix, params, database)
+            # the partition directories carry database/group_name; storing
+            # them again as data columns would shadow the partition
+            # columns on read
+            out = out.drop("database", "group_name")
+            built.set_result(out.schema)
+        except BaseException as e:
+            built.set_exception(e)
+            raise
+        group_dir = self._group_dir(database, name)
+        out.write.mode("overwrite").parquet(group_dir)
+        # provenance sidecar per group write (dbcat semantics,
+        # matdb/utility.py:933-983)
+        P.write_manifest(
+            group_dir,
+            sources=[],
+            database=database,
+            group_name=name,
+            group_type=step["type"],
+            params=params,
+            ran_seed=self.ran_seed,
+        )
+        return group_dir
+
+    def _write_groups_table(self, spark: SparkSession) -> None:
         groups_df = literal_frame(
             spark,
             [tuple(g.values()) for g in self.groups],
             "database string, group_name string, group_type string, params_json string, trainable boolean, splittable boolean",
         )
-        groups_path = os.path.join(self.out_dir, "groups")
-        groups_df.write.mode("overwrite").parquet(groups_path)
+        groups_df.write.mode("overwrite").parquet(os.path.join(self.out_dir, "groups"))
+
+    def setup(self, spark: SparkSession) -> None:
+        """Run every database's steps (gated, grid-expanded) and materialize
+        the configurations catalog.
+
+        Each group's build, write and manifest is one task on a pool of
+        min(#groups, defaultParallelism) threads. A task waits only for
+        the seeds it reads, so grid siblings run together and databases
+        overlap:
+        - a chained step's seeds are its result set as stored (the
+          reference's `prev.rset`), read back from the group directories
+          it wrote with the schema it wrote: no inference job, and no
+          later write re-runs an earlier generator;
+        - a chained step whose output carries no c** cell (substitution)
+          leaves the seeds as they were, so the next step does not wait
+          for its write. That is decided from the built DataFrame's
+          schema, before anything is written;
+        - a result set is read only when a later step consumes it;
+        - the groups table depends on no group's data and is written
+          first; its manifest, which chains every group manifest's
+          version, is written last.
+        Values are keyed by the PRNG, never by scheduling, and the groups
+        table lists groups in spec order, so the catalog does not depend
+        on which task ran first.
+
+        Tasks are wrapped in `inheritable_thread_target`: a plain pool
+        thread starts with empty JVM local properties, so its jobs would
+        leave the caller's job group (`setJobGroup`, `cancelJobGroup`,
+        `statusTracker().getJobIdsForGroup`). The first failing group's
+        exception is re-raised, groups not yet started are cancelled and
+        the groups manifest is not written."""
+        plan = {
+            db_name: [(step, expand_grid(step.get("params", {}), seed=self.ran_seed))
+                      for step in db_spec.get("steps", [])]
+            for db_name, db_spec in self.spec.get("databases", {}).items()
+        }
+        for db_name, steps in plan.items():
+            for step, grid in steps:
+                for suffix, params in grid:
+                    self.groups.append({
+                        "database": db_name,
+                        "group_name": _group_name(step, suffix),
+                        "group_type": step["type"],
+                        "params_json": json.dumps(params, sort_keys=True),
+                        "trainable": bool(step.get("trainable", True)),
+                        "splittable": bool(step.get("splittable", True)),
+                    })
+        pool = ThreadPoolExecutor(max(1, min(len(self.groups), spark.sparkContext.defaultParallelism)))
+
+        def submit(fn, *args) -> Future:
+            return pool.submit(inheritable_thread_target(spark)(fn), *args)
+
+        # A task blocks a pool thread only on futures submitted before it.
+        # The queue is FIFO, so those have already started: no deadlock.
+        try:
+            writes = [submit(self._write_groups_table, spark)]
+            for db_name, steps in plan.items():
+                seeds: Future = Future()
+                seeds.set_result(builtin_seeds(spark))
+                chained = None  # (built, writes) of the last chained step
+                for step, grid in steps:
+                    if chained:
+                        seeds, chained = submit(_next_seeds, spark, *chained, seeds), None
+                    built = [Future() for _ in grid]
+                    step_writes = [
+                        submit(self._write_group, spark, seeds, step, suffix, params, db_name, b)
+                        for b, (suffix, params) in zip(built, grid)
+                    ]
+                    writes += step_writes
+                    if step_writes and step.get("chain", True):
+                        chained = (built, step_writes)
+            _results(writes)
+        finally:
+            pool.shutdown(cancel_futures=True)
         P.write_manifest(
-            groups_path,
-            sources=[
-                os.path.join(cfg_path, f"database={g['database']}", f"group_name={g['group_name']}")
-                for g in self.groups
-            ],
+            os.path.join(self.out_dir, "groups"),
+            sources=[self._group_dir(g["database"], g["group_name"]) for g in self.groups],
             ran_seed=self.ran_seed,
         )
 

@@ -53,6 +53,11 @@ def get_session(
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # TIMESTAMP(NANOS) parquet columns (one generation of the events
+        # testdata) read as BIGINT epoch nanos; catalog.load_events and
+        # the events stream normalize them. Pinned here so that reading
+        # events never changes the session's settings.
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

@@ -67,12 +67,12 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ts_ns BIGINT nanos, ts TimestampType micros) like catalog.load_events.
     The stream source needs an explicit schema, so peek at the parquet
     footer with a batch read to detect which testdata generation this is
-    (TIMESTAMP(NANOS)-as-long vs plain TIMESTAMP(MICROS)/NTZ)."""
+    (TIMESTAMP(NANOS)-as-long, under the `nanosAsLong` setting
+    `session.get_session` pins, vs plain TIMESTAMP(MICROS)/NTZ)."""
     import os
 
     from tracy_matdb_spark.catalog import _relation, table_path
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     events_path = table_path(sf_dir, "events")
     static = _relation(spark, events_path)
     nanos = isinstance(static.schema["ts"].dataType, T.LongType)
