@@ -352,65 +352,6 @@ def main() -> None:
     spark.stop()
 
 
-def compat_main() -> None:
-    """Round-1..8 bench protocol, byte-for-byte (per query sequentially:
-    two warmups, then min of two back-to-back timed runs), kept so the
-    round-9 protocol switch to interleaved medians is BRIDGEABLE: run
-    ``bench.py --compat`` and the interleaved bench in the same session
-    window and the per-query (single_shot_min, interleaved_median) pair
-    decomposes a cross-era delta into protocol vs code. The r8->r9
-    headline shift (+13-39%) was protocol-dominated — relational.py
-    regressed 1.3-1.8x with zero r9 commits — but until this mode
-    existed that was inference, not a recorded fact."""
-    contended, load_start, settle_wait = _contention_guard()
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
-    registry = load_all()
-    spark = get_session("bench")
-    times: dict[str, float] = {}
-    for name, q in registry.items():
-        if not q.headline:
-            continue
-        try:
-            materialize(q.fn(spark, sf_dir))  # warmup (JVM/codegen)
-            materialize(q.fn(spark, sf_dir))  # 2nd warmup (C2 JIT)
-            warm = []
-            for _ in range(2):
-                t0 = time.time()
-                materialize(q.fn(spark, sf_dir))
-                warm.append(time.time() - t0)
-            times[name] = round(min(warm), 3)
-        except Exception as e:  # noqa: BLE001
-            times[name] = -1.0
-            print(f"bench error {name}: {e}", file=sys.stderr)
-    try:
-        from tracy_matdb_spark.streaming.ingest import streaming_ingest_bench
-
-        streaming_ingest_bench(spark, sf_dir)  # warmup
-        s_runs = [streaming_ingest_bench(spark, sf_dir) for _ in range(2)]
-        times["streaming_incremental_dedup"] = min(r["sec"] for r in s_runs)
-    except Exception as e:  # noqa: BLE001
-        times["streaming_incremental_dedup"] = -1.0
-        print(f"bench error streaming_incremental_dedup: {e}", file=sys.stderr)
-    total = round(sum(t for t in times.values() if t >= 0), 3)
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_warm_total_compat_r8_protocol",
-                "value": total,
-                "unit": "sec",
-                "queries": times,
-                "protocol": "r8_single_shot_min_of_2",
-                "sf": sf,
-                "contended": contended,
-                "load1_start": load_start,
-                "settle_wait_s": settle_wait,
-            }
-        )
-    )
-    spark.stop()
-
-
 def genrate() -> None:
     """Generator-throughput mode (BASELINE.md §3: 'rows/s for the
     generator operators at 10^4-10^6 configs'): time distortion /
@@ -457,10 +398,6 @@ def genrate() -> None:
 if __name__ == "__main__":
     if "--genrate" in sys.argv[1:]:
         genrate()
-    elif "--compat" in sys.argv[1:]:
-        # Round-1..8 single-shot protocol, for bridging the round-9
-        # interleaved-median protocol change (see compat_main).
-        compat_main()
     elif "--scaling" in sys.argv[1:]:
         # Scaling-regression mode: sf0.01 vs sf0.1 ratios per query
         # (see tools/scaling_check.py). Writes SCALING.json.

@@ -32,7 +32,7 @@ def test_hash_green_counts_and_red_does_not(tmp_path):
             "__t_green": {"hash_match": True},
             "__t_red": {"hash_match": False, "err": "hash"},
         })
-        green = Q._driver_green(str(tmp_path))
+        green = Q._driver_history(str(tmp_path))[0]
         assert "__t_green" in green
         assert "__t_red" not in green
     finally:
@@ -47,7 +47,7 @@ def test_no_oracle_green_only_while_registration_is_oracle_less(tmp_path):
             "__t_still_none": {"hash_match": None, "err": "no_oracle"},
             "__t_gained_oracle": {"hash_match": None, "err": "no_oracle"},
         })
-        green = Q._driver_green(str(tmp_path))
+        green = Q._driver_history(str(tmp_path))[0]
         assert "__t_still_none" in green  # deliberately oracle-less: rows-only OK
         assert "__t_gained_oracle" not in green  # oracle added later: must re-verify
     finally:
@@ -60,9 +60,9 @@ def test_invalidated_before_ignores_pre_change_rows(tmp_path):
     Q.INVALIDATED_BEFORE["__t_changed"] = 4
     try:
         _write_rows(tmp_path, "CORRECTNESS_r03.json", {"__t_changed": {"hash_match": True}})
-        assert "__t_changed" not in Q._driver_green(str(tmp_path))
+        assert "__t_changed" not in Q._driver_history(str(tmp_path))[0]
         _write_rows(tmp_path, "CORRECTNESS_r04.json", {"__t_changed": {"hash_match": True}})
-        assert "__t_changed" in Q._driver_green(str(tmp_path))
+        assert "__t_changed" in Q._driver_history(str(tmp_path))[0]
     finally:
         del Q.INVALIDATED_BEFORE["__t_changed"]
         for n in added:

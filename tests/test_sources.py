@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -94,28 +95,74 @@ def test_hdf5_byte_layer_works_without_h5py():
     assert back["source_file"] == "g-1.h5"
 
 
-def test_xyz_python_datasource(spark, tmp_path):
-    """Spark 4 custom Python DataSource: spark.read.format('xyz') over
-    the text fixture matches the binaryFile+mapInPandas reader."""
-    from tracy_matdb_spark.queries.coverage import _write_text_fixture
+H5_ROWS = [
+    {
+        "uuid": f"ds-{i}", "n": 1, "symbols": "Cu", "species": ["Cu"],
+        "cell": [[2.5, 0.0, 0.0], [0.0, 2.5, 0.0], [0.0, 0.0, 2.5]],
+        "positions": [[0.25 * i, 0.0, 0.0]], "pbc": [True, True, False],
+        "ref_energy": -1.5 * i, "ref_force": [[0.0, 0.125 * i, 0.0]] if i else None,
+        "params": {"config_type": "manual"} if i else {}, "source_file": "",
+    }
+    for i in range(3)
+]
+
+
+def _canon(rows, drop: str | None = None) -> list[str]:
+    """Rows as sorted JSON strings over every column. source_file is
+    compared by basename: a DataSource opens local paths, binaryFile
+    reports file: URIs."""
+    out = []
+    for r in rows:
+        d = r.asDict(recursive=True)
+        d.pop(drop, None)
+        d["source_file"] = os.path.basename(d["source_file"])
+        out.append(json.dumps(d, sort_keys=True))
+    return sorted(out)
+
+
+@pytest.mark.parametrize("fmt", ["xyz", "atomsh5", "atomsh5-file", "warc"])
+def test_xyz_python_datasource(spark, tmp_path, fmt):
+    """Spark 4 custom Python DataSources: spark.read.format(<fmt>) gives
+    the batch reader's rows on every column, one partition per file; for
+    the streamed formats the streaming ingest's target holds the same
+    rows plus its stamp column. `atomsh5-file` loads a single file."""
+    from tracy_matdb_spark.sources.hdf5io import CONFIG_SCHEMA, read_atoms_h5, write_atoms_h5
     from tracy_matdb_spark.sources.pyds import register_all
     from tracy_matdb_spark.sources.textformats import read_xyz
+    from tracy_matdb_spark.sources.warc import read_warc
+    from tracy_matdb_spark.streaming import ingest
 
     register_all(spark)
-    d = _write_text_fixture("xyz")
-    via_ds = spark.read.format("xyz").load(d)
-    via_map = read_xyz(spark, d)
-    a = sorted(
-        (os.path.basename(r["source_file"]), r["config_id"], r["n"], r["energy"])
-        for r in via_ds.collect()
-    )
-    b = sorted(
-        (os.path.basename(r["source_file"]), r["config_id"], r["n"], r["energy"])
-        for r in via_map.collect()
-    )
-    assert a == b and len(a) == 3
-    # partition granularity = files (distributed parse)
-    assert via_ds.rdd.getNumPartitions() == 2
+    stream = None
+    if fmt == "xyz":
+        from tracy_matdb_spark.queries.coverage import _write_text_fixture
+
+        path = _write_text_fixture("xyz")
+        batch, n_files, n_rows = read_xyz(spark, path), 2, 3
+    elif fmt.startswith("atomsh5"):
+        path = str(tmp_path / "h5")
+        write_atoms_h5(spark.createDataFrame(H5_ROWS, CONFIG_SCHEMA), path)
+        if fmt == "atomsh5":
+            stream, n_files = (ingest.incremental_atoms_h5_ingest, "iteration"), 3
+        else:
+            path, n_files = os.path.join(path, "ds-1.h5"), 1
+        batch, n_rows = read_atoms_h5(spark, path), n_files
+    else:
+        from tracy_matdb_spark.queries.ingest import _write_warc_fixture
+
+        path = _write_warc_fixture()
+        batch, n_files, n_rows = read_warc(spark, path, glob="*.warc*"), 4, 6
+        stream = (ingest.streaming_warc_ingest, "batch_id")
+
+    via_ds = spark.read.format(fmt.split("-")[0]).load(path)
+    rows = _canon(via_ds.collect())
+    assert len(rows) == n_rows and rows == _canon(batch.collect())
+    assert via_ds.rdd.getNumPartitions() == n_files
+    if stream is not None:
+        start, stamp = stream
+        target = str(tmp_path / "target")
+        start(spark, path, target, checkpoint_dir=str(tmp_path / "ckpt")).awaitTermination()
+        assert rows == _canon(spark.read.parquet(target).collect(), drop=stamp)
 
 
 def test_atomsh5_python_datasource(spark, tmp_path):

@@ -244,6 +244,70 @@ def test_incremental_ingest_dedupes_across_batches(spark, tmp_path):
     assert float(got3[got3.auid == "a"].energy.iloc[0]) == 1.0
 
 
+def _auid_schema():
+    from pyspark.sql import types as T
+
+    return T.StructType(
+        [T.StructField("auid", T.StringType()), T.StructField("energy", T.DoubleType())]
+    )
+
+
+def test_incremental_ingest_replayed_batch_appends_nothing(spark, tmp_path):
+    """A restart between a batch's append and its commit-log entry
+    replays the batch; the anti-join against the rows that batch already
+    appended keeps every key once."""
+    import os
+
+    from tracy_matdb_spark.streaming.ingest import incremental_ingest
+
+    schema = _auid_schema()
+    drop = tmp_path / "drop"
+    target = str(tmp_path / "table")
+    ckpt = tmp_path / "ckpt"
+    spark.createDataFrame([("a", 1.0), ("b", 2.0), ("a", 1.0)], schema).write.parquet(
+        str(drop / "batch1")
+    )
+
+    def run():
+        incremental_ingest(
+            spark, str(drop), target, schema, key="auid", checkpoint_dir=str(ckpt)
+        ).awaitTermination()
+
+    run()
+    commit = ckpt / "commits" / "0"
+    os.remove(commit)
+    os.remove(ckpt / "commits" / ".0.crc")
+    run()
+    assert commit.exists()  # batch 0 ran again and committed
+    got = spark.read.parquet(target).toPandas()
+    assert sorted(got.auid) == ["a", "b"]
+
+
+def test_incremental_ingest_raises_history_read_errors(spark, tmp_path, monkeypatch):
+    """Only a missing target means "no history yet": any other error of
+    the history read fails the stream instead of appending rows that
+    were never checked against history."""
+    import pytest
+    from pyspark.errors import AnalysisException, StreamingQueryException
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from tracy_matdb_spark.streaming.ingest import incremental_ingest
+
+    schema = _auid_schema()
+    drop = tmp_path / "drop"
+    target = tmp_path / "table"
+    spark.createDataFrame([("a", 1.0)], schema).write.parquet(str(drop / "batch1"))
+
+    def unreadable(self, *paths, **options):
+        raise AnalysisException(message="history unreadable")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", unreadable)
+    q = incremental_ingest(spark, str(drop), str(target), schema, key="auid")
+    with pytest.raises(StreamingQueryException, match="history unreadable"):
+        q.awaitTermination()
+    assert not target.exists()
+
+
 def test_incremental_atoms_h5_ingest(spark, tmp_path):
     """Streaming .h5 drop-dir ingest: parse new files only, dedupe on
     uuid across batches (streaming/ingest.py, via the pure-Python

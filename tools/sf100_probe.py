@@ -193,7 +193,7 @@ def main(argv: list[str] | None = None) -> None:
         # the probe runs both decades under zstd shuffle compression
         # (disk is the scarce resource at 600M rows); absolute seconds
         # are therefore NOT comparable to the lz4-measured sf10_full
-        # rows — the controlled A/B (tools/codec_ab_probe.py) puts zstd
+        # rows — the controlled A/B (SCALING.json: io_codec_ab) puts zstd
         # at 1.52x lz4 wall-time on the shuffle-bound pagerank — while
         # the sf10->sf100 ratio stays codec-consistent
         "io_codec": os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),

@@ -67,6 +67,13 @@ def _group_name(step: dict, suffix: str) -> str:
     return step.get("name", step["type"]) + (f"-{suffix}" if suffix else "")
 
 
+def _glob_regex(pattern: str) -> str:
+    """Anchored Java regex for a `*`/`?` glob, evaluated by `rlike`."""
+    return "^" + "".join(
+        ".*" if ch == "*" else "." if ch == "?" else re.escape(ch) for ch in pattern
+    ) + "$"
+
+
 def _results(futures: list[Future]) -> list:
     """Results of `futures` in order. The first failure is raised as soon
     as it happens, not after every other future is done."""
@@ -263,12 +270,9 @@ class Pipeline:
         the groups table) — only matches reach the driver, so the catalog
         can hold millions of groups without a driver-side materialize."""
         groups = spark.read.parquet(os.path.join(self.out_dir, "groups"))
-        regex = "^" + "".join(
-            ".*" if ch == "*" else "." if ch == "?" else re.escape(ch) for ch in pattern
-        ) + "$"
         matched = (
             groups.select(F.concat_ws("/", "database", "group_name").alias("path"))
-            .filter(F.col("path").rlike(regex))
+            .filter(F.col("path").rlike(_glob_regex(pattern)))
             .collect()
         )
         return sorted(r["path"] for r in matched)
@@ -357,10 +361,7 @@ class Pipeline:
         hashes = self.group_hashes(spark)
         snap = groups.join(hashes, ["database", "group_name"], "left")
         if dfilter:
-            regex = "^" + "".join(
-                ".*" if ch == "*" else "." if ch == "?" else re.escape(ch) for ch in dfilter
-            ) + "$"
-            snap = snap.filter(F.col("database").rlike(regex))
+            snap = snap.filter(F.col("database").rlike(_glob_regex(dfilter)))
         root = os.path.join(self.out_dir, "final")
         v = P.next_version(root)
         vdir = P.version_dir(root, v)

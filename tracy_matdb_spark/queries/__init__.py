@@ -139,11 +139,6 @@ def _driver_history(root: str | None = None) -> tuple[set[str], dict[str, int]]:
     return green, last_green
 
 
-def _driver_green(root: str | None = None) -> set[str]:
-    """Back-compat wrapper: just the green-name set (see _driver_history)."""
-    return _driver_history(root)[0]
-
-
 def load_all() -> dict[str, Query]:
     """Import all query modules (side effect: fills REGISTRY) and return it.
 

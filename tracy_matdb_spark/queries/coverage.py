@@ -160,20 +160,14 @@ def xyz_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(matdb/io.py:57-141, 204-266)",
 )
 def cfg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tracy_matdb_spark.sources.textformats import read_cfg
+    from functools import partial
+
+    from tracy_matdb_spark.sources.files import read_files, text
+    from tracy_matdb_spark.sources.textformats import CONFIG_SCHEMA, parse_cfg
 
     out_dir = _write_text_fixture("cfg")
-
-    def parse_with_map(content: str, source: str = "") -> list[dict]:
-        from tracy_matdb_spark.sources.textformats import parse_cfg
-
-        return parse_cfg(content, source, type_map=TYPE_SPECIES)
-
-    from tracy_matdb_spark.sources.textformats import CONFIG_SCHEMA, _reader
-
-    files = spark.read.format("binaryFile").option("pathGlobFilter", "*.cfg").load(out_dir)
-    parsed = files.select("path", "content").mapInPandas(_reader(parse_with_map), CONFIG_SCHEMA)
-    return _roundtrip_projection(parsed)
+    parse = text(partial(parse_cfg, type_map=TYPE_SPECIES))
+    return _roundtrip_projection(read_files(spark, out_dir, "*.cfg", parse, CONFIG_SCHEMA))
 
 
 # ---------------------------------------------------------------------------

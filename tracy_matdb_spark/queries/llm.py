@@ -1077,14 +1077,13 @@ def embedding_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     200k vectors (see the LSH_TARGET_BUCKET_LOAD comment). The gate is
     0 at every oracle scale factor, so this plan and the DuckDB twin
     stay bit-identical where the driver hash-compares them."""
-    n, banded, cands = _lsh_stages(spark, sf_dir)
+    n, cands = _lsh_stages(spark, sf_dir)
     return _lsh_verify(cands, n)
 
 
 def _lsh_stages(spark: SparkSession, sf_dir: str):
-    """The LSH pipeline's three frames — (normed vectors, banded
-    signatures, distinct candidate pairs) — shared by the headline
-    query and its stage-telemetry twin so both time the SAME plan."""
+    """The LSH pipeline's frames: (normed vectors, distinct candidate
+    pairs)."""
     emb = load(spark, sf_dir, ("embeddings",))["embeddings"]
     n = emb.selectExpr("vec_id", "embedding", f"{_norm_expr('spark', 'embedding')} AS nrm")
     extra = _lsh_extra_bits(sf_dir)
@@ -1118,7 +1117,7 @@ def _lsh_stages(spark: SparkSession, sf_dir: str):
         .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
         .distinct()
     )
-    return n, banded, cands
+    return n, cands
 
 
 def _lsh_verify(cands: DataFrame, n: DataFrame) -> DataFrame:
@@ -1134,60 +1133,6 @@ def _lsh_verify(cands: DataFrame, n: DataFrame) -> DataFrame:
         .filter(F.col("sim_q") >= NEAR_DUP_MIN_Q)
         .orderBy("vec_a", "vec_b")
     )
-
-
-def embedding_lsh_stage_telemetry(spark: SparkSession, sf_dir: str) -> dict:
-    """Probe-only stage decomposition of embedding_lsh_near_dup (r12
-    verdict item #2: its sf10_full ratio sits 0.09 under its own 12x
-    flag with no per-stage attribution — this twin shows which term,
-    signature build / band shuffle+join / cosine verify, absorbs the
-    widened signatures' extra width). The pagerank_iteration_telemetry
-    replay pattern: cumulative materializations of the SAME frames the
-    headline plans (shared builders, zero plan divergence), marginal
-    differences = per-stage cost.
-
-    * ``sig_s``       — noop-write of the banded signature frame
-                        (scan + norm + bit CASEs + explode, no shuffle)
-    * ``cand_cum_s``  — noop-write of the distinct candidate pairs
-                        (replays sig, adds the (band,bucket) shuffle,
-                        self-join and pair dedupe);
-                        ``band_join_s = cand_cum_s - sig_s``
-    * ``exec_s``      — the full headline materialization;
-                        ``verify_s = exec_s - cand_cum_s``
-    * ``n_candidates``— distinct candidate pairs (separate count pass,
-                        not inside any timed leg)
-    """
-    import time as _t
-
-    def _mat(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    t0 = _t.time()
-    n, banded, cands = _lsh_stages(spark, sf_dir)
-    headline = _lsh_verify(cands, n)
-    build_s = _t.time() - t0
-    t0 = _t.time()
-    _mat(headline)
-    exec_s = _t.time() - t0
-    t0 = _t.time()
-    _mat(banded)
-    sig_s = _t.time() - t0
-    t0 = _t.time()
-    _mat(cands)
-    cand_cum_s = _t.time() - t0
-    n_candidates = cands.count()
-    n_vectors = n.count()
-    return {
-        "n_vectors": n_vectors,
-        "extra_bits": _lsh_extra_bits(sf_dir),
-        "n_candidates": n_candidates,
-        "build_s": round(build_s, 3),
-        "exec_s": round(exec_s, 3),
-        "sig_s": round(sig_s, 3),
-        "cand_cum_s": round(cand_cum_s, 3),
-        "band_join_s": round(cand_cum_s - sig_s, 3),
-        "verify_s": round(exec_s - cand_cum_s, 3),
-    }
 
 
 # ---------------------------------------------------------------------------
@@ -2573,42 +2518,6 @@ def _pq_rerank(emb: DataFrame, short: DataFrame) -> DataFrame:
         .orderBy(F.col("sim_q").desc(), "vec_id")
         .limit(PQ_TOP)
     )
-
-
-def pq_stage_telemetry(spark: SparkSession, sf_dir: str) -> dict:
-    """Replay twin of knn_pq_embeddings (pagerank_iteration_telemetry
-    pattern) attributing its near-flat decade ratio: train_s (codebook
-    Lloyd + collect + query distance table — scale-CONSTANT above the
-    {PQ_TRAIN_MAX} gate), scan_s (the corpus ADC scan to the shortlist,
-    the only corpus-linear stage), total_s (the full composed query;
-    its plan re-executes the scan internally, so rerank_resid_s =
-    total_s - scan_s is the re-rank's marginal cost, not a separately
-    materialized stage). corpus_rows comes from parquet footers — no
-    extra job."""
-    import time as _t
-
-    t0 = _t.time()
-    cb_np, dt_np, emb = _pq_driver_index(spark, sf_dir)
-    train_s = _t.time() - t0
-    t0 = _t.time()
-    n_short = len(_pq_adc_short(emb, cb_np, dt_np).collect())  # PQ_RERANK rows
-    scan_s = _t.time() - t0
-    t0 = _t.time()
-    n_top = len(_pq_rerank(emb, _pq_adc_short(emb, cb_np, dt_np)).collect())
-    total_s = _t.time() - t0
-    try:
-        corpus_rows = table_num_rows(sf_dir, "embeddings")
-    except Exception:  # noqa: BLE001 — stat unavailable (telemetry only)
-        corpus_rows = -1
-    return {
-        "train_s": round(train_s, 3),
-        "scan_s": round(scan_s, 3),
-        "total_s": round(total_s, 3),
-        "rerank_resid_s": round(max(0.0, total_s - scan_s), 3),
-        "n_short": n_short,
-        "n_top": n_top,
-        "corpus_rows": corpus_rows,
-    }
 
 
 def _pq_recall_sql(train_bound: int | None = None) -> str:

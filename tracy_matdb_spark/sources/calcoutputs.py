@@ -10,7 +10,8 @@ folder-at-a-time, single-threaded file loops in the reference.
 Spark-first design: one `binaryFile` scan over the run folders (one row
 per output file — parallelism == file count, which at 100 TB is the
 natural unit: one DFT run = one file), then an Arrow-batched
-`mapInPandas` parser emitting typed rows. The parse itself is per-record
+`mapInPandas` parser emitting typed rows (sources/files.py, UTF-8 decoded
+with `errors="replace"`). The parse itself is per-record
 text/XML work — the sanctioned Python path — while everything downstream
 (conform rename to ref_*, joins back to `configurations`, aggregations)
 stays JVM-side. No ase dependency: vasprun.xml is well-formed XML
@@ -32,11 +33,11 @@ from __future__ import annotations
 
 import re
 import xml.etree.ElementTree as ET
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from tracy_matdb_spark.sources.files import read_files, text
 
 _MAT3 = T.ArrayType(T.ArrayType(T.DoubleType()))
 
@@ -481,30 +482,12 @@ def format_xdatcar(cell: list[list[float]], species_types: list[str], counts: li
 # ---------------------------------------------------------------------------
 
 
-def _ingest(parse_fn, schema):
-    cols = [f.name for f in schema.fields]
-
-    def run(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in iterator:
-            rows = []
-            for content, path in zip(pdf["content"], pdf["path"]):
-                rows.extend(parse_fn(bytes(content).decode("utf-8", "replace"), path))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return run
-
-
-def _read(spark: SparkSession, path: str, glob: str, parse_fn, schema) -> DataFrame:
-    files = spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
-    return files.select("path", "content").mapInPandas(_ingest(parse_fn, schema), schema)
-
-
 def read_vasprun(spark: SparkSession, path: str, glob: str = "*.xml") -> DataFrame:
-    return _read(spark, path, glob, parse_vasprun, EXTRACT_SCHEMA)
+    return read_files(spark, path, glob, text(parse_vasprun, errors="replace"), EXTRACT_SCHEMA)
 
 
 def read_outcar(spark: SparkSession, path: str, glob: str = "OUTCAR*") -> DataFrame:
-    return _read(spark, path, glob, parse_outcar, EXTRACT_SCHEMA)
+    return read_files(spark, path, glob, text(parse_outcar, errors="replace"), EXTRACT_SCHEMA)
 
 
 def read_pwscf(spark: SparkSession, path: str, glob: str = "*.xml") -> DataFrame:
@@ -512,11 +495,13 @@ def read_pwscf(spark: SparkSession, path: str, glob: str = "*.xml") -> DataFrame
     matdb/calculators/qe.py:306-446) as a distributed binaryFile +
     mapInPandas scan — same one-file-one-run parallelism as
     read_vasprun."""
-    return _read(spark, path, glob, parse_pwscf_xml, QE_EXTRACT_SCHEMA)
+    return read_files(
+        spark, path, glob, text(parse_pwscf_xml, errors="replace"), QE_EXTRACT_SCHEMA
+    )
 
 
 def read_xdatcar(spark: SparkSession, path: str, glob: str = "XDATCAR*") -> DataFrame:
-    return _read(spark, path, glob, parse_xdatcar, FRAME_SCHEMA)
+    return read_files(spark, path, glob, text(parse_xdatcar, errors="replace"), FRAME_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -36,6 +36,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from tracy_matdb_spark.sources.files import read_files
+
 try:  # h5py is optional by design — see module docstring
     import h5py  # noqa: F401
 
@@ -190,23 +192,18 @@ def parse_atoms_h5_bytes(content: bytes, source_file: str = "") -> dict[str, Any
     return tree_to_record(hdf5lite.read_tree_bytes(bytes(content)), source_file)
 
 
+def parse_atoms_h5_file(content: bytes, source_file: str = "") -> list[dict[str, Any]]:
+    """`parse_atoms_h5_bytes` in the per-file parser shape of
+    sources/files.py: one atoms.h5 file is one row."""
+    return [parse_atoms_h5_bytes(content, source_file)]
+
+
 def read_atoms_h5(spark: SparkSession, path: str, glob: str = "*.h5") -> DataFrame:
     """Distributed atoms.h5 ingest: binaryFile scan (partition-parallel
     file inventory, no driver listing bottleneck) -> mapInPandas parse on
     the executors. Mirrors AtomsList.read over a directory
     (atoms.py:591-635) as a scan."""
-    import pandas as pd
-
-    files = spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
-
-    def parse(batches):
-        for pdf in batches:
-            rows = [
-                parse_atoms_h5_bytes(c, p) for p, c in zip(pdf["path"], pdf["content"])
-            ]
-            yield pd.DataFrame(rows, columns=[f.name for f in CONFIG_SCHEMA.fields])
-
-    return files.select("path", "content").mapInPandas(parse, CONFIG_SCHEMA)
+    return read_files(spark, path, glob, parse_atoms_h5_file, CONFIG_SCHEMA)
 
 
 def write_atoms_h5(df: DataFrame, out_dir: str) -> None:

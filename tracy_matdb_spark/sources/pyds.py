@@ -3,13 +3,13 @@
 Spark 4 lets a pure-Python reader participate as a first-class
 ``spark.read.format(...)`` source: the driver plans one
 ``InputPartition`` per file and the ``read`` method executes on the
-executors (Arrow-batched), so parallelism is file-granular exactly
-like the built-in file sources. This wraps the existing atoms text
-parsers (sources/textformats.py, reference matdb/io.py:57-343) so the
-ingest surface composes with everything a DataFrame source supports —
-``.filter``/``.select`` pruning downstream, unions, streaming-ish
-re-lists — without the explicit binaryFile+mapInPandas plumbing at
-the call site:
+executors, so parallelism is file-granular exactly like the built-in
+file sources. The ``xyz``, ``atomsh5`` and ``warc`` sources are one
+``_FileReader`` running the same per-file parser as each format's
+batch reader (sources/files.py), so both surfaces emit identical rows;
+the ``atomsh5`` stream reader builds its rows with the same helper.
+``load`` takes a directory (files matching the format's glob) or one
+file, and the result composes like any DataFrame source:
 
     spark.dataSource.register(XYZDataSource)
     spark.read.format("xyz").load("/data/configs").filter(...)
@@ -26,6 +26,7 @@ import glob
 import os
 from collections.abc import Iterator, Sequence
 
+from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -33,8 +34,16 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-# field order must match textformats.CONFIG_SCHEMA
-_FIELDS = ("source_file", "config_id", "n", "cell", "species", "positions", "forces", "energy")
+from tracy_matdb_spark.sources import hdf5io, textformats, warc
+from tracy_matdb_spark.sources.files import Parser, text
+
+
+def _file_rows(path: str, parse: Parser, schema: T.StructType) -> list[tuple]:
+    """Parse one file into row tuples in ``schema`` field order."""
+    with open(path, "rb") as fh:
+        recs = parse(fh.read(), path)
+    names = schema.fieldNames()
+    return [tuple(rec[k] for k in names) for rec in recs]
 
 
 class _FilePartition(InputPartition):
@@ -42,15 +51,16 @@ class _FilePartition(InputPartition):
         self.path = path
 
 
-class _AtomsFileReader(DataSourceReader):
+class _FileReader(DataSourceReader):
     """One InputPartition per matching file; executors parse bytes."""
 
-    def __init__(self, options: dict, glob_pat: str, parse_fn_name: str):
+    def __init__(self, options: dict, glob_pat: str, parse: Parser, schema: T.StructType):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("path option is required (spark.read.format(...).load(path))")
         self.glob_pat = glob_pat
-        self.parse_fn_name = parse_fn_name
+        self.parse = parse
+        self.schema = schema
 
     def partitions(self) -> Sequence[InputPartition]:
         files = sorted(glob.glob(os.path.join(self.path, self.glob_pat)))
@@ -59,14 +69,7 @@ class _AtomsFileReader(DataSourceReader):
         return [_FilePartition(f) for f in files]
 
     def read(self, partition: _FilePartition) -> Iterator[tuple]:
-        # import inside: runs on the executor's Python worker
-        from tracy_matdb_spark.sources import textformats
-
-        parse = getattr(textformats, self.parse_fn_name)
-        with open(partition.path, encoding="utf-8") as fh:
-            content = fh.read()
-        for rec in parse(content, partition.path):
-            yield tuple(rec[k] for k in _FIELDS)
+        return iter(_file_rows(partition.path, self.parse, self.schema))
 
 
 class XYZDataSource(DataSource):
@@ -77,12 +80,12 @@ class XYZDataSource(DataSource):
         return "xyz"
 
     def schema(self):
-        from tracy_matdb_spark.sources.textformats import CONFIG_SCHEMA
-
-        return CONFIG_SCHEMA
+        return textformats.CONFIG_SCHEMA
 
     def reader(self, schema) -> DataSourceReader:
-        return _AtomsFileReader(self.options, "*.xyz", "parse_xyz")
+        return _FileReader(
+            self.options, "*.xyz", text(textformats.parse_xyz), textformats.CONFIG_SCHEMA
+        )
 
 
 class AtomsH5DataSource(DataSource):
@@ -94,34 +97,15 @@ class AtomsH5DataSource(DataSource):
         return "atomsh5"
 
     def schema(self):
-        from tracy_matdb_spark.sources.hdf5io import CONFIG_SCHEMA
-
-        return CONFIG_SCHEMA
+        return hdf5io.CONFIG_SCHEMA
 
     def simpleStreamReader(self, schema) -> "SimpleDataSourceStreamReader":
         return _AtomsH5StreamReader(self.options)
 
     def reader(self, schema) -> DataSourceReader:
-        options = self.options
-        path = options.get("path")
-
-        class _H5Reader(DataSourceReader):
-            def partitions(self) -> Sequence[InputPartition]:
-                if not path:
-                    raise ValueError("path option is required")
-                return [_FilePartition(f) for f in sorted(glob.glob(os.path.join(path, "*.h5")))]
-
-            def read(self, partition: _FilePartition) -> Iterator[tuple]:
-                from tracy_matdb_spark.sources.hdf5io import (
-                    CONFIG_SCHEMA,
-                    parse_atoms_h5_bytes,
-                )
-
-                with open(partition.path, "rb") as fh:
-                    rec = parse_atoms_h5_bytes(fh.read(), partition.path)
-                yield tuple(rec[f.name] for f in CONFIG_SCHEMA.fields)
-
-        return _H5Reader()
+        return _FileReader(
+            self.options, "*.h5", hdf5io.parse_atoms_h5_file, hdf5io.CONFIG_SCHEMA
+        )
 
 
 class WarcDataSource(DataSource):
@@ -135,36 +119,15 @@ class WarcDataSource(DataSource):
         return "warc"
 
     def schema(self):
-        from tracy_matdb_spark.sources.warc import WARC_SCHEMA
-
-        return WARC_SCHEMA
+        return warc.WARC_SCHEMA
 
     def reader(self, schema) -> DataSourceReader:
-        options = self.options
-        path = options.get("path")
-        glob_pat = options.get("glob", "*.warc*")
-
-        class _WarcReader(DataSourceReader):
-            def partitions(self) -> Sequence[InputPartition]:
-                if not path:
-                    raise ValueError("path option is required")
-                files = sorted(glob.glob(os.path.join(path, glob_pat)))
-                if not files and os.path.isfile(path):
-                    files = [path]
-                return [_FilePartition(f) for f in files]
-
-            def read(self, partition: _FilePartition) -> Iterator[tuple]:
-                from tracy_matdb_spark.sources.warc import (
-                    WARC_SCHEMA,
-                    parse_warc_bytes,
-                )
-
-                with open(partition.path, "rb") as fh:
-                    data = fh.read()
-                for rec in parse_warc_bytes(data, partition.path):
-                    yield tuple(rec[f.name] for f in WARC_SCHEMA.fields)
-
-        return _WarcReader()
+        return _FileReader(
+            self.options,
+            self.options.get("glob", "*.warc*"),
+            warc.parse_warc_bytes,
+            warc.WARC_SCHEMA,
+        )
 
 
 def register_all(spark) -> None:
@@ -196,14 +159,11 @@ class _AtomsH5StreamReader(SimpleDataSourceStreamReader):
     def _rows(self, files: list[str]) -> list[tuple]:
         # materialized list, not a generator: the streaming runtime
         # caches and copy.copy()s the returned iterator for replay
-        from tracy_matdb_spark.sources.hdf5io import CONFIG_SCHEMA, parse_atoms_h5_bytes
-
-        rows = []
-        for f in files:
-            with open(f, "rb") as fh:
-                rec = parse_atoms_h5_bytes(fh.read(), f)
-            rows.append(tuple(rec[fld.name] for fld in CONFIG_SCHEMA.fields))
-        return rows
+        return [
+            row
+            for f in files
+            for row in _file_rows(f, hdf5io.parse_atoms_h5_file, hdf5io.CONFIG_SCHEMA)
+        ]
 
     def read(self, start: dict):
         seen = set(start.get("files", []))

@@ -13,20 +13,19 @@ are Spark ingest jobs:
 
 At 100 TB the same plan holds: binaryFile splits by file, so parallelism
 == file count; pathGlobFilter prunes; the parser is embarrassingly
-parallel. Export runs the inverse per partition.
+parallel. The scan and parse loop is the shared one in sources/files.py
+(strict UTF-8). Export runs the inverse per partition.
 
-No ase/h5py dependency: the parsers are self-contained (formats are
-public, trivially line-structured). HDF5 interop is stubbed behind an
-import-try (h5py absent in this image).
+No ase dependency: the parsers are self-contained (formats are public,
+trivially line-structured). HDF5 interop lives in sources/hdf5io.py.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from tracy_matdb_spark.sources.files import read_files, text
 
 CONFIG_SCHEMA = T.StructType(
     [
@@ -191,28 +190,12 @@ def format_cfg(rec: dict, type_of: dict[str, int] | None = None) -> str:
 # ---------------------------------------------------------------------------
 
 
-def _reader(parse_fn):
-    def run(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in iterator:
-            rows = []
-            for content, path in zip(pdf["content"], pdf["path"]):
-                rows.extend(parse_fn(bytes(content).decode("utf-8"), path))
-            yield pd.DataFrame(
-                rows,
-                columns=[f.name for f in CONFIG_SCHEMA.fields],
-            )
-
-    return run
-
-
 def read_xyz(spark: SparkSession, path: str, glob: str = "*.xyz") -> DataFrame:
-    files = spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
-    return files.select("path", "content").mapInPandas(_reader(parse_xyz), CONFIG_SCHEMA)
+    return read_files(spark, path, glob, text(parse_xyz), CONFIG_SCHEMA)
 
 
 def read_cfg(spark: SparkSession, path: str, glob: str = "*.cfg") -> DataFrame:
-    files = spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
-    return files.select("path", "content").mapInPandas(_reader(parse_cfg), CONFIG_SCHEMA)
+    return read_files(spark, path, glob, text(parse_cfg), CONFIG_SCHEMA)
 
 
 def write_text_partitions(df: DataFrame, out_dir: str, fmt: str = "xyz") -> None:
@@ -235,14 +218,3 @@ def write_text_partitions(df: DataFrame, out_dir: str, fmt: str = "xyz") -> None
                 f.write("\n".join(chunks) + "\n")
 
     df.foreachPartition(dump)
-
-
-# HDF5 interop lives in sources/hdf5io.py (h5py when installed, else the
-# pure-Python hdf5lite file-format subset — see its module docstring and
-# the one-time migration design).
-
-
-def read_hdf5(spark: SparkSession, path: str) -> DataFrame:
-    from tracy_matdb_spark.sources.hdf5io import read_atoms_h5
-
-    return read_atoms_h5(spark, path)

@@ -28,7 +28,6 @@ from __future__ import annotations
 import gzip
 import io
 import os
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -38,6 +37,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from tracy_matdb_spark.sources.files import read_files
 
 WARC_SCHEMA = StructType(
     [
@@ -158,16 +159,4 @@ def read_warc(spark: SparkSession, path: str, glob: str = "*.warc.gz") -> DataFr
     per segment — the Common Crawl unit of parallelism) + Arrow-batched
     mapInPandas parse. No driver-side I/O; segment lists of any size
     stream through the scan."""
-    import pandas as pd
-
-    files = spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
-
-    def run(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        cols = [f.name for f in WARC_SCHEMA.fields]
-        for pdf in it:
-            rows: list[dict] = []
-            for content, p in zip(pdf["content"], pdf["path"]):
-                rows.extend(parse_warc_bytes(bytes(content), p))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.select("path", "content").mapInPandas(run, WARC_SCHEMA)
+    return read_files(spark, path, glob, parse_warc_bytes, WARC_SCHEMA)

@@ -9,19 +9,91 @@ watches a drop directory, and each micro-batch is upserted into the
 target table with an anti-join dedupe — iteration number = streaming
 batch id, replacing the reference's per-iteration pkl membership files.
 
-At scale the drop directory becomes an object-store prefix (or Kafka)
-and the anti-join's right side stays a key-only projection — the
-existing-keys read is column-pruned to the hash column, so history
-grows the dedupe cost only by key bytes, not record bytes.
+All three ingests (parquet drops, atoms.h5 files, WARC segments) run
+one `_upsert_stream` plan, parsing files with the per-file loop their
+batch readers use (sources/files.py). Each batch reads the target's
+history key-only with an explicit schema, anti-joins against it, then
+`dropDuplicates` and appends. A missing target (Spark's `PATH_NOT_FOUND`,
+the first batch) means no history; any other read error is raised.
+A batch replayed after a restart between its append and its checkpoint
+commit anti-joins against its own appended rows and adds nothing. At
+scale the drop directory becomes an object-store prefix (or Kafka) and
+history grows the dedupe cost only by key bytes, not record bytes.
 """
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.errors import AnalysisException
 from pyspark.sql.streaming import StreamingQuery
+
+from tracy_matdb_spark.sources.files import Parser, parse_files
+
+_BINARY_FILE_SCHEMA = T.StructType(
+    [
+        T.StructField("path", T.StringType()),
+        T.StructField("modificationTime", T.TimestampType()),
+        T.StructField("length", T.LongType()),
+        T.StructField("content", T.BinaryType()),
+    ]
+)
+
+
+def _upsert_stream(
+    spark: SparkSession,
+    drop_dir: str,
+    glob: str,
+    target_path: str,
+    schema: T.StructType,
+    keys: list[str],
+    stamp: str,
+    checkpoint_dir: str | None,
+    parse: Parser | None = None,
+) -> StreamingQuery:
+    """Upsert the files under `drop_dir` matching `glob` into the parquet
+    table at `target_path`: never-seen `keys` only, batch id as `stamp`.
+    The files are parquet of `schema`, or with `parse`, binaryFile rows
+    that `parse` turns into rows of `schema`."""
+    # key-only schema for the history read: the anti-join right side
+    # needs just the keys, and handing the reader an explicit schema
+    # skips the per-batch footer schema-inference pass (the target is
+    # rewritten every batch so no relation cache can help it)
+    key_schema = T.StructType([schema[k] for k in keys])
+
+    def _upsert(batch_df: DataFrame, batch_id: int) -> None:
+        fresh = batch_df if parse is None else parse_files(batch_df, parse, schema)
+        try:
+            seen = batch_df.sparkSession.read.schema(key_schema).parquet(target_path)
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
+        else:
+            # anti-join BEFORE the dropDuplicates shuffle: membership
+            # filtering commutes with pick-one-per-key (all rows of a
+            # key are dropped or kept together), and the broadcast
+            # anti-join is map-side — so already-seen rows never cross
+            # the dedup exchange (guide §2.3, filter before shuffle)
+            fresh = fresh.join(seen, keys, "left_anti")
+        (
+            fresh.dropDuplicates(keys)
+            .withColumn(stamp, F.lit(batch_id))
+            .write.mode("append")
+            .parquet(target_path)
+        )
+
+    reader = spark.readStream.option("recursiveFileLookup", "true").option(
+        "pathGlobFilter", glob
+    )
+    if parse is None:
+        stream = reader.schema(schema).format("parquet").load(drop_dir)
+    else:  # streaming file sources require an explicit schema
+        stream = reader.schema(_BINARY_FILE_SCHEMA).format("binaryFile").load(drop_dir)
+    writer = stream.writeStream.foreachBatch(_upsert).trigger(availableNow=True)
+    if checkpoint_dir is not None:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    return writer.start()
 
 
 def incremental_ingest(
@@ -42,50 +114,11 @@ def incremental_ingest(
     already-processed files, so the same dropped file is never ingested
     twice even across restarts.
     """
-
-    # key-only schema for the history read: the anti-join right side
-    # needs just the key column, and handing the reader an explicit
-    # schema skips the per-batch footer schema-inference pass (measured
-    # as part of ~0.08 s/batch of driver-side plan building; the target
-    # is rewritten every batch so no relation cache can help it)
-    key_schema = T.StructType([schema[key]])
-
-    def _upsert(batch_df: DataFrame, batch_id: int) -> None:
-        fresh = batch_df
-        try:
-            seen = (
-                batch_df.sparkSession.read.schema(key_schema)
-                .parquet(target_path)
-                .select(key)
-            )
-            # anti-join BEFORE the dropDuplicates shuffle: membership
-            # filtering commutes with pick-one-per-key (all rows of a
-            # key are dropped or kept together), and the broadcast
-            # anti-join is map-side — so already-seen rows never cross
-            # the dedup exchange (guide §2.3, filter before shuffle)
-            fresh = fresh.join(seen, key, "left_anti")
-        except AnalysisException:
-            pass  # first batch: target does not exist yet
-        (
-            fresh.dropDuplicates([key])
-            .withColumn("iteration", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(target_path)
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        # drops arrive as whole directories (one per producer run); recurse
-        # and keep only parquet parts (skips _SUCCESS markers)
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.parquet")
-        .load(drop_dir)
+    # drops arrive as whole directories (one per producer run); recurse
+    # and keep only parquet parts (skips _SUCCESS markers)
+    return _upsert_stream(
+        spark, drop_dir, "*.parquet", target_path, schema, [key], "iteration", checkpoint_dir
     )
-    writer = stream.writeStream.foreachBatch(_upsert).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
 
 
 def incremental_atoms_h5_ingest(
@@ -107,58 +140,12 @@ def incremental_atoms_h5_ingest(
     anti-joins history on uuid, and appends. At 100 TB the drop dir is
     an object-store prefix and the history read stays pruned to the
     uuid column."""
-    import pandas as pd
+    from tracy_matdb_spark.sources.hdf5io import CONFIG_SCHEMA, parse_atoms_h5_file
 
-    from tracy_matdb_spark.sources.hdf5io import CONFIG_SCHEMA, parse_atoms_h5_bytes
-
-    def _parse(batches):
-        for pdf in batches:
-            rows = [
-                parse_atoms_h5_bytes(c, p) for p, c in zip(pdf["path"], pdf["content"])
-            ]
-            yield pd.DataFrame(rows, columns=[f.name for f in CONFIG_SCHEMA.fields])
-
-    uuid_schema = T.StructType([CONFIG_SCHEMA["uuid"]])
-
-    def _upsert(batch_df: DataFrame, batch_id: int) -> None:
-        parsed = batch_df.select("path", "content").mapInPandas(_parse, CONFIG_SCHEMA)
-        try:
-            # key-only explicit schema: no per-batch footer inference,
-            # and the anti-join runs before the dedup shuffle (§2.3)
-            seen = (
-                batch_df.sparkSession.read.schema(uuid_schema)
-                .parquet(target_path)
-                .select("uuid")
-            )
-            parsed = parsed.join(seen, "uuid", "left_anti")
-        except AnalysisException:
-            pass  # first batch: target does not exist yet
-        parsed = parsed.dropDuplicates(["uuid"])
-        (
-            parsed.withColumn("iteration", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(target_path)
-        )
-
-    binary_file_schema = T.StructType(
-        [
-            T.StructField("path", T.StringType()),
-            T.StructField("modificationTime", T.TimestampType()),
-            T.StructField("length", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
+    return _upsert_stream(
+        spark, drop_dir, "*.h5", target_path, CONFIG_SCHEMA, ["uuid"], "iteration",
+        checkpoint_dir, parse_atoms_h5_file,
     )
-    stream = (
-        spark.readStream.format("binaryFile")
-        .schema(binary_file_schema)  # streaming sources require one
-        .option("pathGlobFilter", "*.h5")
-        .option("recursiveFileLookup", "true")
-        .load(drop_dir)
-    )
-    writer = stream.writeStream.foreachBatch(_upsert).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
 
 
 def streaming_warc_ingest(
@@ -179,57 +166,12 @@ def streaming_warc_ingest(
     path uses, and anti-joins history on the record key so re-crawled
     URLs with identical capture dates never duplicate. At 100 TB the
     history read prunes to the two key columns."""
-    import pandas as pd
-
     from tracy_matdb_spark.sources.warc import WARC_SCHEMA, parse_warc_bytes
 
-    def _parse(batches):
-        cols = [f.name for f in WARC_SCHEMA.fields]
-        for pdf in batches:
-            rows: list[dict] = []
-            for p, c in zip(pdf["path"], pdf["content"]):
-                rows.extend(parse_warc_bytes(bytes(c), p))
-            yield pd.DataFrame(rows, columns=cols)
-
-    warc_key_schema = T.StructType([WARC_SCHEMA["url"], WARC_SCHEMA["warc_date"]])
-
-    def _upsert(batch_df: DataFrame, batch_id: int) -> None:
-        parsed = batch_df.select("path", "content").mapInPandas(_parse, WARC_SCHEMA)
-        try:
-            # key-only explicit schema: no per-batch footer inference,
-            # and the anti-join runs before the dedup shuffle (§2.3)
-            seen = (
-                batch_df.sparkSession.read.schema(warc_key_schema)
-                .parquet(target_path)
-                .select("url", "warc_date")
-            )
-            parsed = parsed.join(seen, ["url", "warc_date"], "left_anti")
-        except AnalysisException:
-            pass  # first batch: target does not exist yet
-        parsed = parsed.dropDuplicates(["url", "warc_date"])
-        parsed.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
-            target_path
-        )
-
-    binary_file_schema = T.StructType(
-        [
-            T.StructField("path", T.StringType()),
-            T.StructField("modificationTime", T.TimestampType()),
-            T.StructField("length", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
+    return _upsert_stream(
+        spark, drop_dir, "*.warc*", target_path, WARC_SCHEMA, ["url", "warc_date"],
+        "batch_id", checkpoint_dir, parse_warc_bytes,
     )
-    stream = (
-        spark.readStream.format("binaryFile")
-        .schema(binary_file_schema)
-        .option("pathGlobFilter", "*.warc*")
-        .option("recursiveFileLookup", "true")
-        .load(drop_dir)
-    )
-    writer = stream.writeStream.foreachBatch(_upsert).trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
 
 
 def streaming_ingest_bench(spark: SparkSession, sf_dir: str, n_batches: int = 4) -> dict:
