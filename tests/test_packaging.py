@@ -59,6 +59,12 @@ def test_build_py_ships_protobuf_shim(tmp_path):
     assert not missing, f"shim files absent from build_py output: {sorted(missing)}"
     # ensure_protobuf tells an installed shim from a genuine protobuf by it
     assert os.path.isfile(os.path.join(build_lib, SHIM_REL, "google", "protobuf", "TRACY_MATDB_SHIM"))
+    # get_session puts the local-filesystem jar on the driver classpath
+    jvm_rel = os.path.join("tracy_matdb_spark", "jvm")
+    java = [f for f in os.listdir(os.path.join(ROOT, jvm_rel)) if f.endswith(".java")]
+    assert java, "local-filesystem sources missing from the working tree?"
+    for name in ["localfs.jar", *java]:
+        assert os.path.isfile(os.path.join(build_lib, jvm_rel, name)), name
     # the engine itself must be there too, not just the data files
     assert os.path.exists(
         os.path.join(build_lib, "tracy_matdb_spark", "vendor", "__init__.py")

@@ -284,11 +284,13 @@ def test_incremental_ingest_replayed_batch_appends_nothing(spark, tmp_path):
 
 
 def test_incremental_ingest_raises_history_read_errors(spark, tmp_path, monkeypatch):
-    """Only a missing target means "no history yet": any other error of
-    the history read fails the stream instead of appending rows that
-    were never checked against history."""
+    """Any error of the history read fails the stream instead of
+    appending rows that were never checked against history."""
+    import os
+
     import pytest
     from pyspark.errors import AnalysisException, StreamingQueryException
+    from pyspark.sql import functions as F
     from pyspark.sql.readwriter import DataFrameReader
 
     from tracy_matdb_spark.streaming.ingest import incremental_ingest
@@ -297,6 +299,11 @@ def test_incremental_ingest_raises_history_read_errors(spark, tmp_path, monkeypa
     drop = tmp_path / "drop"
     target = tmp_path / "table"
     spark.createDataFrame([("a", 1.0)], schema).write.parquet(str(drop / "batch1"))
+    # a target with history, so the batch has to read it
+    spark.createDataFrame([("z", 0.0)], schema).withColumn("iteration", F.lit(0)).write.parquet(
+        str(target)
+    )
+    history = sorted(os.listdir(target))
 
     def unreadable(self, *paths, **options):
         raise AnalysisException(message="history unreadable")
@@ -305,7 +312,32 @@ def test_incremental_ingest_raises_history_read_errors(spark, tmp_path, monkeypa
     q = incremental_ingest(spark, str(drop), str(target), schema, key="auid")
     with pytest.raises(StreamingQueryException, match="history unreadable"):
         q.awaitTermination()
-    assert not target.exists()
+    assert sorted(os.listdir(target)) == history
+
+
+def test_incremental_ingest_reads_no_history_on_fresh_target(spark, tmp_path, monkeypatch):
+    """A target that does not exist yet has no history: the first batch
+    does not try (and fail) to read it."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from tracy_matdb_spark.streaming.ingest import incremental_ingest
+
+    schema = _auid_schema()
+    drop = tmp_path / "drop"
+    target = str(tmp_path / "table")
+    spark.createDataFrame([("a", 1.0), ("b", 2.0)], schema).write.parquet(str(drop / "batch1"))
+    read_paths = []
+    parquet = DataFrameReader.parquet
+
+    def recording(self, *paths, **options):
+        read_paths.extend(paths)
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", recording)
+    incremental_ingest(spark, str(drop), target, schema, key="auid").awaitTermination()
+    monkeypatch.undo()
+    assert target not in read_paths
+    assert sorted(spark.read.parquet(target).toPandas().auid) == ["a", "b"]
 
 
 def test_incremental_atoms_h5_ingest(spark, tmp_path):

@@ -10,13 +10,35 @@ the local core count rather than the 200 default.
 At cluster scale the same factory applies — only master/memory change;
 `spark.sql.shuffle.partitions` should track executor-core totals or be
 left to AQE coalescing.
+
+The `file:` scheme runs on the fork-free local filesystem in `jvm/`
+(README: Fork-free local filesystem).
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+LOCALFS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "localfs.jar")
+_LOCALFS_IMPL = {
+    "spark.hadoop.fs.file.impl": "tracy_matdb_spark.jvm.NioLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "tracy_matdb_spark.jvm.NioLocalFs",
+}
+
+
+def _localfs_loadable() -> bool:
+    """Whether the session's JVM can load the jar's classes. A JVM this
+    call launches has the jar on its class path; one already running (an
+    earlier session's, a pyspark shell's, spark-submit's) has only what it
+    was started with, and Hadoop resolves `fs.file.impl` by name."""
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return True
+    SparkContext._ensure_initialized()
+    conf = SparkContext._jvm.org.apache.hadoop.conf.Configuration(False)
+    return all(conf.getClassByNameOrNull(cls) is not None for cls in _LOCALFS_IMPL.values())
 
 
 def get_session(
@@ -104,7 +126,13 @@ def get_session(
         # call-site line.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    # fork-free local filesystem (module docstring)
+    if _localfs_loadable():
+        builder = builder.config(map=_LOCALFS_IMPL)
+    conf = dict(extra_conf or {})
+    class_path = [LOCALFS_JAR, conf.pop("spark.driver.extraClassPath", "")]
+    builder = builder.config("spark.driver.extraClassPath", os.pathsep.join(filter(None, class_path)))
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

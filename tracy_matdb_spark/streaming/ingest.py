@@ -13,8 +13,10 @@ All three ingests (parquet drops, atoms.h5 files, WARC segments) run
 one `_upsert_stream` plan, parsing files with the per-file loop their
 batch readers use (sources/files.py). Each batch reads the target's
 history key-only with an explicit schema, anti-joins against it, then
-`dropDuplicates` and appends. A missing target (Spark's `PATH_NOT_FOUND`,
-the first batch) means no history; any other read error is raised.
+`dropDuplicates` and appends. The target's own Hadoop filesystem decides
+whether there is history yet (`exists`, which is URI-correct where
+`os.path` is not), so the first batch reads nothing and fails nothing;
+every error of a history read is raised.
 A batch replayed after a restart between its append and its checkpoint
 commit anti-joins against its own appended rows and adds nothing. At
 scale the drop directory becomes an object-store prefix (or Kafka) and
@@ -23,7 +25,6 @@ history grows the dedupe cost only by key bytes, not record bytes.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -61,15 +62,13 @@ def _upsert_stream(
     # skips the per-batch footer schema-inference pass (the target is
     # rewritten every batch so no relation cache can help it)
     key_schema = T.StructType([schema[k] for k in keys])
+    target = spark._jvm.org.apache.hadoop.fs.Path(target_path)
+    target_fs = target.getFileSystem(spark._jsc.hadoopConfiguration())
 
     def _upsert(batch_df: DataFrame, batch_id: int) -> None:
         fresh = batch_df if parse is None else parse_files(batch_df, parse, schema)
-        try:
+        if target_fs.exists(target):
             seen = batch_df.sparkSession.read.schema(key_schema).parquet(target_path)
-        except AnalysisException as e:
-            if e.getCondition() != "PATH_NOT_FOUND":
-                raise
-        else:
             # anti-join BEFORE the dropDuplicates shuffle: membership
             # filtering commutes with pick-one-per-key (all rows of a
             # key are dropped or kept together), and the broadcast
