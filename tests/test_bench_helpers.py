@@ -82,7 +82,7 @@ def test_median_iqr():
 
 
 def test_streaming_ingest_bench_dedupes(spark):
-    from tracy_matdb_spark.streaming.ingest import streaming_ingest_bench
+    from bench import streaming_ingest_bench
 
     out = streaming_ingest_bench(spark, SF_SMOKE, n_batches=3)
     # overlapping drops offered more rows than the source holds; the

@@ -142,7 +142,7 @@ def test_degenerate_inputs_guarded(spark, tmp_path):
 
 def test_stream_psi_records_progress_under_registry_name(spark):
     """The streaming PSI monitor must record its stream progress under
-    the REGISTRY name (the round-11 keying convention scaling_sf10's
+    the REGISTRY name (the round-11 keying convention tools/scaling.py's
     state telemetry reads), and every window's drift must be a finite
     micro value."""
     from tracy_matdb_spark.queries import load_all

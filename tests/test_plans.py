@@ -480,10 +480,11 @@ def test_planaudit_artifact_covers_registry():
 
 def test_scaling_artifact_keeps_all_decades():
     """SCALING.json must retain every recorded decade. The round-9
-    rewrite path in tools/scaling_check.py preserved only the 'sf1'
+    rewrite path of the sf0.01 -> sf0.1 sweep preserved only the 'sf1'
     key, so a re-run would silently drop the committed sf10 evidence
-    (round-9 ADVICE). scaling_check now copies every foreign top-level
-    key forward; this gate fails if a decade block ever disappears."""
+    (round-9 ADVICE). tools/scaling.py's block writer now replaces one
+    key and keeps every other; this gate fails if a decade block ever
+    disappears."""
     import json
     import os
 
@@ -495,5 +496,5 @@ def test_scaling_artifact_keeps_all_decades():
     assert not missing, (
         f"SCALING.json lost decade blocks {sorted(missing)} — a rewrite "
         f"dropped foreign keys; regenerate the missing decade with "
-        f"tools/scaling_sf1.py / tools/scaling_sf10.py"
+        f"python tools/scaling.py <decade>"
     )

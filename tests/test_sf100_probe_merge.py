@@ -1,16 +1,17 @@
-"""Unit tests for the sf100 probe's --only subset-merge logic
-(tools/sf100_probe._merge_subset). The probe itself is an offline
-measurement run (SCALING.json sf100_probe is a committed artifact);
-these pin the merge semantics without a session: a subset re-measure
-must never drop rows it didn't touch, must clear a prior flag only by
-re-measuring that query clean, and must keep the full run's load1 with
-the subset run's load1 appended for audit."""
+"""Unit tests for the scaling runner's --only subset-merge logic
+(tools/scaling._merge_subset, first written for the sf100 probe and
+now shared by every decade). The runs themselves are offline
+measurements (SCALING.json is a committed artifact); these pin the
+merge semantics without a session: a subset re-measure must never drop
+rows it didn't touch, must clear a prior flag only by re-measuring that
+query clean, and must keep the full run's load1 with the subset run's
+load1 appended for audit."""
 
 from __future__ import annotations
 
 import copy
 
-from tools.sf100_probe import _merge_subset
+from tools.scaling import _merge_subset
 
 
 def _block(queries, flagged=(), tel=None, load1=1.0):
@@ -110,19 +111,19 @@ def test_unknown_only_name_is_a_loud_error():
     still rewrites SCALING.json as if a re-measure happened."""
     import pytest
 
-    from tools.sf100_probe import main
+    from tools.scaling import main
 
     with pytest.raises(SystemExit, match="unknown --only"):
-        main(["--only", "knn_pq"])
+        main(["sf100_probe", "--only", "knn_pq"])
 
 
 def test_import_has_no_codec_env_side_effect():
     """Importing the module (as this test file does for _merge_subset)
-    must not set SPARK_GRAFT_IO_CODEC — the zstd default binds inside
-    main() only, else every later get_session in the process silently
-    runs zstd."""
+    must not set SPARK_GRAFT_IO_CODEC — the sf100_probe decade's zstd
+    default binds inside run() only, else every later get_session in the
+    process silently runs zstd."""
     import os
 
-    import tools.sf100_probe  # noqa: F401
+    import tools.scaling  # noqa: F401
 
     assert "SPARK_GRAFT_IO_CODEC" not in os.environ

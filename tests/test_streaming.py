@@ -822,7 +822,7 @@ def test_streaming_lsh_out_of_order_batches_reconcile(spark, tmp_path):
 
 
 def test_stream_progress_keyed_by_registry_name(spark):
-    """tools/scaling_sf10.py reads LAST_STREAM_PROGRESS by REGISTRY name,
+    """tools/scaling.py reads LAST_STREAM_PROGRESS by REGISTRY name,
     while the run_* helpers sink under short memory-table names — the
     round-11 key mismatch made state_rows silently read -1 for
     events_stateful_totals_tws. Pin the contract: after each stateful

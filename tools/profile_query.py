@@ -18,12 +18,9 @@ import time
 
 sys.path.insert(0, os.getcwd())
 
+from bench import materialize  # noqa: E402
 from tracy_matdb_spark.queries import load_all  # noqa: E402
 from tracy_matdb_spark.session import get_session  # noqa: E402
-
-
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:

@@ -1,15 +1,19 @@
 """Attribute streaming_incremental_dedup's per-batch wall time.
 
-The headline streaming bench (streaming/ingest.py streaming_ingest_bench)
-times 4 availableNow micro-batch runs end to end. This tool re-runs the
-same staged-drop protocol but splits each run into:
+The headline streaming bench (bench.py streaming_ingest_bench) times 4
+availableNow micro-batch runs end to end. This tool re-runs the same
+staged-drop protocol (bench.stage_drops) through the engine's own
+`incremental_ingest`, and splits each run into:
 
-  start_s   — writeStream.start() returning (driver-side stream setup)
-  upsert_s  — wall time INSIDE the foreachBatch callback (the actual
-              anti-join + dropDuplicates + parquet append)
-  await_s   — awaitTermination() minus the callback time: micro-batch
-              machinery (source listing, offset/commit log, batch
-              planning, stream teardown)
+  start_s     — incremental_ingest returning (driver-side stream setup)
+  upsert_s    — wall time INSIDE the foreachBatch callback (the actual
+                anti-join + dropDuplicates + parquet append): the
+                `addBatch` phase of each micro-batch's
+                StreamingQueryProgress
+  await_s     — awaitTermination() wall time
+  machinery_s — await_s minus upsert_s: micro-batch machinery (source
+                listing, offset/commit log, batch planning, stream
+                teardown)
 
 Usage: python tools/profile_streaming.py <sf_dir> [reps]
 """
@@ -17,107 +21,56 @@ Usage: python tools/profile_streaming.py <sf_dir> [reps]
 from __future__ import annotations
 
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.getcwd())
 
-from pyspark.sql import functions as F  # noqa: E402
+from bench import stage_drops  # noqa: E402
 
 
 def run_once(spark, sf_dir: str) -> dict:
-    import shutil
-    import tempfile
-    import os.path as _p
-
     from tracy_matdb_spark.catalog import _relation
-    from tracy_matdb_spark.streaming import ingest as ing
+    from tracy_matdb_spark.streaming.ingest import incremental_ingest
 
-    docs = _relation(spark, _p.join(sf_dir, "documents.parquet"))
-    schema = docs.schema
+    docs = _relation(spark, os.path.join(sf_dir, "documents.parquet"))
     n_batches = 4
     base = tempfile.mkdtemp(prefix="stream_profile_")
     out: dict = {"batches": []}
-    # per-callback timing via monkeypatched foreachBatch fn
     try:
-        stage = _p.join(base, "stage")
-        drop = _p.join(base, "drop")
-        target = _p.join(base, "target")
-        ckpt = _p.join(base, "ckpt")
+        stage = os.path.join(base, "stage")
+        drop = os.path.join(base, "drop")
+        target = os.path.join(base, "target")
+        ckpt = os.path.join(base, "ckpt")
         os.makedirs(drop, exist_ok=True)
-        for i in range(n_batches):
-            part = docs.where((F.col("doc_id") % n_batches) == i)
-            if i:
-                part = part.unionByName(
-                    docs.where(
-                        ((F.col("doc_id") % n_batches) == i - 1)
-                        & (F.col("doc_id") % 10 == 0)
-                    )
-                )
-            part.write.parquet(_p.join(stage, f"b{i}"))
+        stage_drops(docs, stage, n_batches)
         t_all = time.time()
         for i in range(n_batches):
-            shutil.move(_p.join(stage, f"b{i}"), _p.join(drop, f"b{i}"))
-            cb_time = [0.0, 0]
-            orig_ingest = ing.incremental_ingest
-
-            # wrap: rebuild the same writer but time the callback
-            from pyspark.sql import types as T
-
-            key = "doc_id"
-            key_schema = T.StructType([schema[key]])
-
-            def _upsert(batch_df, batch_id):
-                t0 = time.time()
-                from pyspark.errors import AnalysisException
-
-                fresh = batch_df
-                try:
-                    seen = (
-                        batch_df.sparkSession.read.schema(key_schema)
-                        .parquet(target)
-                        .select(key)
-                    )
-                    fresh = fresh.join(seen, key, "left_anti")
-                except AnalysisException:
-                    pass
-                (
-                    fresh.dropDuplicates([key])
-                    .withColumn("iteration", F.lit(batch_id))
-                    .write.mode("append")
-                    .parquet(target)
-                )
-                cb_time[0] += time.time() - t0
-                cb_time[1] += 1
-
+            shutil.move(os.path.join(stage, f"b{i}"), os.path.join(drop, f"b{i}"))
             t0 = time.time()
-            stream = (
-                spark.readStream.schema(schema)
-                .format("parquet")
-                .option("recursiveFileLookup", "true")
-                .option("pathGlobFilter", "*.parquet")
-                .load(drop)
-            )
-            q = (
-                stream.writeStream.foreachBatch(_upsert)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
+            q = incremental_ingest(
+                spark, drop, target, docs.schema, key="doc_id", checkpoint_dir=ckpt
             )
             t1 = time.time()
             q.awaitTermination()
             t2 = time.time()
+            upserts = [
+                p["durationMs"]["addBatch"] / 1000.0
+                for p in q.recentProgress
+                if "addBatch" in p.get("durationMs", {})
+            ]
             out["batches"].append(
                 {
                     "start_s": round(t1 - t0, 3),
                     "await_s": round(t2 - t1, 3),
-                    "upsert_s": round(cb_time[0], 3),
-                    "machinery_s": round(t2 - t1 - cb_time[0], 3),
-                    "n_callbacks": cb_time[1],
+                    "upsert_s": round(sum(upserts), 3),
+                    "machinery_s": round(t2 - t1 - sum(upserts), 3),
+                    "n_callbacks": len(upserts),
                     "total_s": round(t2 - t0, 3),
                 }
             )
-            _ = orig_ingest  # keep import referenced
         out["total_s"] = round(time.time() - t_all, 3)
         out["rows_ingested"] = spark.read.parquet(target).count()
         return out

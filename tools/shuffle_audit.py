@@ -1,6 +1,6 @@
 """Shuffle/spill telemetry audit: bytes moved per query at sf0.1.
 
-Motivation: the scaling harness (tools/scaling_check.py) times queries
+Motivation: the scaling runner (tools/scaling.py) times queries
 across two data decades, but wall-time on local[32] under-weights the
 quantity that actually kills a 100 TB run — SHUFFLE VOLUME. A plan that
 shuffles 10x its input is network-bound on a 1000-executor cluster no
@@ -44,6 +44,8 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import materialize
+from tools.scaling import write_block
 from tracy_matdb_spark.queries import load_all
 from tracy_matdb_spark.session import get_session
 
@@ -73,10 +75,6 @@ def _completed_stages(base_url: str, app_id: str) -> dict[tuple[int, int], dict]
     with urllib.request.urlopen(url, timeout=30) as fh:
         stages = json.load(fh)
     return {(s["stageId"], s["attemptId"]): s for s in stages}
-
-
-def _materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def _mb(n: float) -> float:
@@ -163,7 +161,7 @@ def run(
     for name in sorted(names):
         fn = registry[name].fn
         try:
-            _materialize(fn(spark, sf_dir))
+            materialize(fn(spark, sf_dir))
         except Exception as e:  # noqa: BLE001
             rows[name] = {"error": str(e)[:200]}
             flagged.append(f"error:{name}")
@@ -194,21 +192,9 @@ def run(
         "flagged": sorted(flagged),
     }
     if out_path:
-        # preserve every top-level key this run does not itself produce
-        # (the --sf1 byte-scaling block and any future decade) across
-        # rewrites of the sf0.1 sweep — same discipline as
-        # tools/scaling_check.py after the round-9 ADVICE
-        try:
-            with open(out_path) as fh:
-                prev = json.load(fh)
-            for key, val in prev.items():
-                if key not in result:
-                    result[key] = val
-        except (OSError, ValueError):
-            pass
-        with open(out_path, "w") as fh:
-            json.dump(result, fh, indent=2, sort_keys=True)
-            fh.write("\n")
+        # merged into the root: the --sf1 byte-scaling block and any
+        # future decade survive a rewrite of the sf0.1 sweep
+        write_block(out_path, None, result)
     return result
 
 
@@ -268,10 +254,7 @@ def main() -> None:
         )
         large = run(None, sf_dir=sf1_dir)
         cmp = byte_scaling(small, large)
-        small["sf1_bytes"] = cmp
-        with open(shuffle_path, "w") as fh:
-            json.dump(small, fh, indent=2, sort_keys=True)
-            fh.write("\n")
+        write_block(shuffle_path, "sf1_bytes", cmp)
         worst = sorted(
             ((n, r["bytes_ratio"]) for n, r in cmp["queries"].items()
              if r["bytes_ratio"] is not None),

@@ -236,7 +236,7 @@ def gated_local_checkpoint(
     share-an-intermediate trick (operators/rank.py's single_scan, the
     shingle-table reuse in queries/llm.py) trades executor STORAGE
     memory for recomputation — the right trade below the gate, a
-    measured OOM above it (tools/scaling_sf10.py --sf100 killed three
+    measured OOM above it (`tools/scaling.py sf100_documents` killed three
     queries this way at 5M docs / 24g heap). Above the gate each
     consumer recomputes the frame: streaming, constant-memory, and on a
     real cluster the map work it repeats is the cheap part of the plan.

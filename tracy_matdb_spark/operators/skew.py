@@ -41,7 +41,7 @@ def salted_agg(
     column, shards are DISJOINT in that column, so distinct-count merges
     as a plain SUM of per-shard sizes — no re-flatten, stage 2 carries
     one int per shard. That form beats the naive hot-key groupBy in the
-    skew stress (tools/scaling_check.py:skew_stress, SCALING.json).
+    skew stress (tools/scaling.py:skew_stress, SCALING.json).
     """
     salt = (F.xxhash64(F.col(shard_on)) % n_salts + n_salts) % n_salts
     sharded = (

@@ -485,7 +485,7 @@ LSH_VERIFY_BCAST_MAX_DOCS = 20_000  # shingle/size join-side broadcast gate
 # its pre-checkpoint size estimate, which for explode-over-compressed-
 # parquet undercounts ~60x (sf10 measured: 57 MB estimate, 3.7 GiB
 # materialized — the plan-time BroadcastHashJoin GC-thrashed the JVM to
-# death; tools/stress_sf10.py found it). Below the gate the shingle table
+# death; `tools/scaling.py sweep` found it). Below the gate the shingle table
 # is genuinely broadcast material; above it, a MERGE hint pins sort-merge
 # — the only strategy that spills gracefully at this size (shuffle-hash
 # was tried and failed at sf10: 32 concurrent build-side hash maps
@@ -2137,7 +2137,7 @@ def streaming_minhash_dedup_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # occupied (band, sig) bucket across all three runs —
                 # the number the "state scales with occupied buckets,
                 # not stream length" claim is checked against
-                # (tools/scaling_sf10.py reads this)
+                # (tools/scaling.py's typed-state rows read this)
                 from tracy_matdb_spark.streaming.windows import record_stream_progress
 
                 record_stream_progress(q, "streaming_minhash_dedup_tws")

@@ -107,7 +107,7 @@ def exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate and the join back to positions. At 500k docs that was the
     measured-fastest single-scan trick; at 5M docs the ~450M-row
     checkpoint floods the executor storage pool and OOMs a 24g heap
-    (tools/scaling_sf10.py --sf100 caught it) — executor-memory
+    (`tools/scaling.py sf100_documents` caught it) — executor-memory
     materialization of a corpus-sized intermediate is a scale killer no
     gate can save. The window formulation keeps the single scan (the
     tokenize+explode+md5 map work feeds exactly one shuffle) with only

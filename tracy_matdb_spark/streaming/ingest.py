@@ -171,67 +171,3 @@ def streaming_warc_ingest(
         spark, drop_dir, "*.warc*", target_path, WARC_SCHEMA, ["url", "warc_date"],
         "batch_id", checkpoint_dir, parse_warc_bytes,
     )
-
-
-def streaming_ingest_bench(spark: SparkSession, sf_dir: str, n_batches: int = 4) -> dict:
-    """Bench-only end-to-end run of the drop-directory incremental dedup
-    at real data scale (round-5 verdict item #6): the `documents` table
-    is staged as `n_batches` producer drops — each drop overlaps the
-    previous one by its doc_id % 10 == 0 slice, so the anti-join dedupe
-    actually rejects rows — then each drop is moved into the watched
-    directory and processed by `incremental_ingest` (availableNow +
-    checkpoint, exactly the production entry point). Timed section =
-    the streaming runs only; staging is excluded. Returns seconds,
-    rows ingested (must equal the distinct source count: overlaps
-    deduped), and rows offered."""
-    import os
-    import shutil
-    import tempfile
-    import time as _t
-
-    import os.path as _p
-
-    from tracy_matdb_spark.catalog import _relation
-
-    docs = _relation(spark, _p.join(sf_dir, "documents.parquet"))
-    schema = docs.schema
-    base = tempfile.mkdtemp(prefix="stream_ingest_bench_")
-    try:
-        stage = _p.join(base, "stage")
-        drop = _p.join(base, "drop")
-        target = _p.join(base, "target")
-        ckpt = _p.join(base, "ckpt")
-        os.makedirs(drop, exist_ok=True)
-        offered = 0
-        for i in range(n_batches):
-            part = docs.where((F.col("doc_id") % n_batches) == i)
-            if i:
-                part = part.unionByName(
-                    docs.where(
-                        ((F.col("doc_id") % n_batches) == i - 1)
-                        & (F.col("doc_id") % 10 == 0)
-                    )
-                )
-            part.write.parquet(_p.join(stage, f"b{i}"))
-            offered += part.count()
-        t0 = _t.time()
-        for i in range(n_batches):
-            shutil.move(_p.join(stage, f"b{i}"), _p.join(drop, f"b{i}"))
-            q = incremental_ingest(
-                spark, drop, target, schema, key="doc_id", checkpoint_dir=ckpt
-            )
-            q.awaitTermination()
-        sec = _t.time() - t0
-        rows = spark.read.parquet(target).count()
-        n_src = docs.count()
-        return {
-            "sec": round(sec, 3),
-            "rows_ingested": rows,
-            "rows_offered": offered,
-            "rows_source": n_src,
-            "batches": n_batches,
-        }
-    finally:
-        # a failure mid-run must not leak several staged copies of the
-        # documents table in /tmp across bench rounds
-        shutil.rmtree(base, ignore_errors=True)

@@ -34,7 +34,7 @@ EVENTS_SCHEMA = T.StructType(
 # stream length" (streaming_lsh_first_seen) are MEASURED per run, not
 # asserted. Populated by every run_*_to_completion helper and by
 # record_stream_progress for hand-rolled query loops; consumed by
-# tools/scaling_sf10.py's tws rows. Telemetry only — never read by a
+# tools/scaling.py's typed-state rows. Telemetry only — never read by a
 # query's own plan.
 LAST_STREAM_PROGRESS: dict[str, dict] = {}
 
@@ -44,7 +44,7 @@ def record_stream_progress(q, query_name: str, registry_name: str | None = None)
     StreamingQuery's last progress. Safe to call after awaitTermination;
     swallows everything — telemetry must never fail a query.
 
-    `query_name` is the memory-sink name; consumers (tools/scaling_sf10.py)
+    `query_name` is the memory-sink name; consumers (tools/scaling.py)
     look up by REGISTRY name, so callers whose sink name differs must pass
     `registry_name` — the entry is recorded under both keys."""
     try:
