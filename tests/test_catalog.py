@@ -6,16 +6,23 @@ session + same file (path, mtime_ns, size) -> same DataFrame object
 must produce a fresh relation that sees the new bytes — the invariant
 that separates a catalog from result caching. Directory tables bypass
 the cache (their file set can change without touching the dir inode).
+Also the per-file footer memo and the one failure contract of the
+footer-stat size gates.
 """
 
 from __future__ import annotations
 
 import os
 
+import pytest
+
 from tracy_matdb_spark.catalog import (
-    _ROW_GROUP_CACHE,
+    _FOOTER_CACHE,
     _relation,
+    footer_stat,
+    gated_local_checkpoint,
     load,
+    spread_unsplittable_scan,
     table_num_row_groups,
 )
 
@@ -66,7 +73,8 @@ def test_rewrite_evicts_stale_entry_instead_of_accumulating(spark, tmp_path):
 
 def test_row_group_memo_hits_and_invalidates_on_rewrite(spark, tmp_path):
     # r15 ADVICE: spread_unsplittable_scan consults this per query
-    # construction — the footer must be opened once per file version
+    # construction — the footer must be opened once per file version.
+    # The memo holds (num_rows, num_row_groups) per file
     f = str(tmp_path / "rg.parquet")
     p = str(tmp_path / "tmp.parquet")
 
@@ -80,16 +88,17 @@ def test_row_group_memo_hits_and_invalidates_on_rewrite(spark, tmp_path):
     rp = os.path.realpath(f)
     # prove the second call reads the memo, not the footer: plant a
     # sentinel under the current stat key and see it come back
-    _ROW_GROUP_CACHE[rp] = (_ROW_GROUP_CACHE[rp][0], a + 7)
+    key, (rows, _) = _FOOTER_CACHE[rp]
+    _FOOTER_CACHE[rp] = (key, (rows, a + 7))
     assert table_num_row_groups(str(tmp_path), "rg") == a + 7
-    _ROW_GROUP_CACHE[rp] = (_ROW_GROUP_CACHE[rp][0], a)
+    _FOOTER_CACHE[rp] = (key, (rows, a))
     _write(100_000)  # bigger file -> new (mtime, size, inode)
     b = table_num_row_groups(str(tmp_path), "rg")
     st = os.stat(f)
     # the memo re-keyed to the NEW file version (did not serve stale)
-    assert _ROW_GROUP_CACHE[os.path.realpath(f)] == (
+    assert _FOOTER_CACHE[os.path.realpath(f)] == (
         (st.st_mtime_ns, st.st_size, st.st_ino),
-        b,
+        (100_000, b),
     )
 
 
@@ -122,3 +131,39 @@ def test_load_events_leaves_session_conf_unchanged(spark):
     load_events(session, SF_SMOKE)
     assert dict(session.conf.getAll) == before
     assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+
+
+def test_unreadable_footer_warns_and_takes_the_big_branch(spark, tmp_path):
+    """The one failure contract of every size gate: a footer that
+    cannot be read warns (naming the table) and the gate takes its
+    big-data branch; only footer-read errors are caught, so a
+    programming error (a TypeError) propagates."""
+    from tracy_matdb_spark.queries.llm import (
+        LSH_EXTRA_BITS_MAX,
+        PQ_TRAIN_MAX,
+        _corpus_scaled_side,
+        _lsh_extra_bits,
+        _pq_train_bound,
+    )
+
+    sf_dir = str(tmp_path)
+    (tmp_path / "documents.parquet").write_text("not parquet")  # ValueError
+    (tmp_path / "embeddings.parquet").mkdir()  # no part-files: OSError
+    df = spark.range(3)
+
+    with pytest.warns(UserWarning, match="documents"):
+        assert gated_local_checkpoint(df, sf_dir) is df
+    with pytest.warns(UserWarning, match="documents"):
+        assert spread_unsplittable_scan(df, sf_dir, "documents") is df
+    with pytest.warns(UserWarning, match="documents"):
+        hinted = _corpus_scaled_side(df, sf_dir)
+    assert "merge" in hinted._jdf.queryExecution().logical().toString().lower()
+    with pytest.warns(UserWarning, match="embeddings"):
+        assert _lsh_extra_bits(sf_dir) == LSH_EXTRA_BITS_MAX
+    with pytest.warns(UserWarning, match="embeddings"):
+        assert _pq_train_bound(sf_dir) == PQ_TRAIN_MAX
+
+    with pytest.raises(TypeError):
+        footer_stat(None, "documents")
+    with pytest.raises(TypeError):
+        gated_local_checkpoint(df, None)

@@ -49,8 +49,22 @@ def test_pagerank_fixed_point_bounds(spark):
     assert set(pdf.node_type) <= {"customer", "supplier"}
 
 
+def _huge_lineitem(monkeypatch):
+    """Force _pr_graph's edge gate big through the catalog stat, for
+    `lineitem` only: the customer/supplier broadcast gate keeps its
+    small branch."""
+    from tracy_matdb_spark import catalog
+
+    real = catalog.table_num_rows
+    monkeypatch.setattr(
+        catalog,
+        "table_num_rows",
+        lambda sf_dir, name: 1 << 40 if name == "lineitem" else real(sf_dir, name),
+    )
+
+
 def test_pagerank_edge_gate_paths_equivalent(spark, monkeypatch):
-    """SPARK_GRAFT_PR_EDGE_GATE_ROWS=0 forces _pr_graph's big-data
+    """A huge `lineitem` footer stat forces _pr_graph's big-data
     branch (symmetrized edges materialized once, hash-partitioned on
     the join key, DISK_ONLY, degree from ONE keyed agg over that
     cache) at smoke SF; its result must equal the small-SF
@@ -61,7 +75,7 @@ def test_pagerank_edge_gate_paths_equivalent(spark, monkeypatch):
 
     fn = REGISTRY["pagerank_bipartite"].fn
     small_path = fn(spark, SF_SMOKE).toPandas()
-    monkeypatch.setenv("SPARK_GRAFT_PR_EDGE_GATE_ROWS", "0")
+    _huge_lineitem(monkeypatch)
     big_path = fn(spark, SF_SMOKE).toPandas()
     pd.testing.assert_frame_equal(small_path, big_path)
 
@@ -70,7 +84,7 @@ def test_pagerank_edge_cache_unpersisted_on_next_invocation(spark, monkeypatch):
     """r15 lifecycle (r14 verdict #8): consecutive big-SF pagerank
     invocations in one session must not accumulate DISK_ONLY edge sets
     — constructing invocation N+1 unpersists invocation N's cache."""
-    monkeypatch.setenv("SPARK_GRAFT_PR_EDGE_GATE_ROWS", "0")
+    _huge_lineitem(monkeypatch)
     fn = REGISTRY["pagerank_bipartite"].fn
     fn(spark, SF_SMOKE).collect()
     first = spark._tms_pr_edge_cache

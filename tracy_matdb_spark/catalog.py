@@ -13,6 +13,7 @@ query that consumes them.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -85,34 +86,56 @@ def load(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> d
     return {name: _relation(spark, table_path(sf_dir, name)) for name in names}
 
 
-def table_num_rows(sf_dir: str, name: str) -> int:
-    """Exact row count of a catalog table from parquet FOOTER metadata —
-    no Spark job, no data scan. This is the catalog statistic a
-    warehouse planner consults (row counts live in every parquet footer
-    and every metastore); queries use it to make size-gated plan
-    choices (e.g. broadcast-vs-shuffle) at points where a checkpoint
-    boundary hides the stats from Catalyst. Handles both a single
-    .parquet file and a directory of part-files; raises OSError for a
-    missing table AND for a directory with zero part-files (a partially
-    written or cleaned table has no stats — returning 0 would flip
-    size-gated plans to 'broadcast' on absent information; callers
-    treat any failure as "stat unavailable" and take the conservative
-    path)."""
+_FOOTER_CACHE: dict[str, tuple[tuple[int, int, int], tuple[int, int]]] = {}
+
+
+def _file_footer(path: str) -> tuple[int, int]:
+    """(num_rows, num_row_groups) of one parquet file, read from its
+    FOOTER (no Spark job) and memoized per (mtime_ns, size, inode):
+    the size gates consult footers on EVERY query construction, and
+    re-opening the same immutable footer per call is exactly the
+    redundant metadata work the relation cache exists to remove. Keyed
+    by realpath, so a rewritten file replaces its entry (the inode
+    catches rename-over-replace) instead of serving a stale count."""
     import pyarrow.parquet as pq
 
+    st = os.stat(path)
+    stat_key = (st.st_mtime_ns, st.st_size, st.st_ino)
+    rp = os.path.realpath(path)
+    hit = _FOOTER_CACHE.get(rp)
+    if hit is not None and hit[0] == stat_key:
+        return hit[1]
+    md = pq.ParquetFile(path).metadata
+    counts = (md.num_rows, md.num_row_groups)
+    _FOOTER_CACHE[rp] = (stat_key, counts)
+    return counts
+
+
+def _table_footers(sf_dir: str, name: str) -> list[tuple[int, int]]:
+    """One footer per file of a catalog table: a single .parquet file,
+    or every part-file of a directory (listed on each call — a
+    directory's file set can change without touching its inode, so only
+    the per-file footers are memoized). Raises OSError for a missing
+    table AND for a directory with zero part-files: a partially written
+    or cleaned table has no stats, and returning 0 would flip size-gated
+    plans to 'small' on absent information."""
     path = table_path(sf_dir, name)
     if os.path.isdir(path):
         parts = [e for e in os.listdir(path) if e.endswith(".parquet")]
         if not parts:
             raise FileNotFoundError(f"no .parquet part-files in {path}")
-        return sum(
-            pq.ParquetFile(os.path.join(path, entry)).metadata.num_rows
-            for entry in parts
-        )
-    return pq.ParquetFile(path).metadata.num_rows
+        return [_file_footer(os.path.join(path, e)) for e in parts]
+    return [_file_footer(path)]
 
 
-_ROW_GROUP_CACHE: dict[str, tuple[tuple[int, int, int], int]] = {}
+def table_num_rows(sf_dir: str, name: str) -> int:
+    """Exact row count of a catalog table from parquet FOOTER metadata —
+    no Spark job, no data scan. This is the catalog statistic a
+    warehouse planner consults (row counts live in every parquet footer
+    and every metastore); queries use it, through `footer_stat`, to make
+    size-gated plan choices (e.g. broadcast-vs-shuffle) at points where
+    a checkpoint boundary hides the stats from Catalyst."""
+    return sum(rows for rows, _ in _table_footers(sf_dir, name))
 
 
 def table_num_row_groups(sf_dir: str, name: str) -> int:
@@ -120,36 +143,33 @@ def table_num_row_groups(sf_dir: str, name: str) -> int:
     metadata (no Spark job): total row groups across part-files. A row
     group is the vectorized reader's indivisible unit — no split
     setting (`maxPartitionBytes`, `minPartitionNum`) can give a scan
-    more data-carrying tasks than this. Same failure contract as
-    table_num_rows: raises for a missing table / empty dir, callers
-    treat failure as "stat unavailable".
+    more data-carrying tasks than this."""
+    return sum(groups for _, groups in _table_footers(sf_dir, name))
 
-    Single-file tables memoize the count per (mtime_ns, size, inode) —
-    spread_unsplittable_scan consults this on EVERY query construction,
-    and re-opening the same immutable footer per call is exactly the
-    redundant metadata work the relation cache exists to remove.
-    Directory tables bypass the memo (their part-file set can change
-    without touching the dir inode), mirroring _relation's rule."""
-    import pyarrow.parquet as pq
 
-    path = table_path(sf_dir, name)
-    if os.path.isdir(path):
-        parts = [e for e in os.listdir(path) if e.endswith(".parquet")]
-        if not parts:
-            raise FileNotFoundError(f"no .parquet part-files in {path}")
-        return sum(
-            pq.ParquetFile(os.path.join(path, entry)).metadata.num_row_groups
-            for entry in parts
+def footer_stat(sf_dir: str, *tables: str, row_groups: bool = False) -> int | None:
+    """Summed footer row count (row-group count with `row_groups`) of
+    `tables`, or None when a footer cannot be read. This is the one
+    failure path of every size gate: a failed read warns, naming the
+    tables, `sf_dir` and the error, and each gate treats None as "big"
+    — the conservative branch. Only what a footer read raises is
+    caught (OSError for a missing table or empty directory, ValueError
+    — pyarrow's ArrowInvalid — for a file that is not parquet); a
+    programming error such as a TypeError propagates.
+
+    The stat functions are resolved from this module's globals at call
+    time, so a test can force a gate's branch by monkeypatching
+    `catalog.table_num_rows` / `catalog.table_num_row_groups`."""
+    stat = table_num_row_groups if row_groups else table_num_rows
+    try:
+        return sum(stat(sf_dir, t) for t in tables)
+    except (OSError, ValueError) as e:
+        warnings.warn(
+            f"footer stat for {', '.join(tables)} under {sf_dir!r} failed ({e}); "
+            "taking the big-data branch",
+            stacklevel=2,
         )
-    st = os.stat(path)
-    stat_key = (st.st_mtime_ns, st.st_size, st.st_ino)
-    rp = os.path.realpath(path)
-    hit = _ROW_GROUP_CACHE.get(rp)
-    if hit is not None and hit[0] == stat_key:
-        return hit[1]
-    n = pq.ParquetFile(path).metadata.num_row_groups
-    _ROW_GROUP_CACHE[rp] = (stat_key, n)
-    return n
+        return None
 
 
 def spread_unsplittable_scan(df: DataFrame, sf_dir: str, table: str) -> DataFrame:
@@ -171,9 +191,8 @@ def spread_unsplittable_scan(df: DataFrame, sf_dir: str, table: str) -> DataFram
     is derived from defaultParallelism, so the driver's lower-core bench
     run gets a proportionally lower bar. Stat failure -> df unchanged
     (no extra exchange on absent information)."""
-    try:
-        splits = table_num_row_groups(sf_dir, table)
-    except Exception:  # noqa: BLE001 — stat unavailable -> no-op
+    splits = footer_stat(sf_dir, table, row_groups=True)
+    if splits is None:
         return df
     cores = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(cores) if 2 * splits < cores else df
@@ -240,10 +259,9 @@ def gated_local_checkpoint(
     queries this way at 5M docs / 24g heap). Above the gate each
     consumer recomputes the frame: streaming, constant-memory, and on a
     real cluster the map work it repeats is the cheap part of the plan.
-    Stat failure -> no checkpoint (the conservative direction, matching
-    table_num_rows' contract)."""
-    try:
-        n = table_num_rows(sf_dir, table)
-    except Exception:  # noqa: BLE001 — stat unavailable -> assume huge
+    Stat failure -> no checkpoint (the conservative direction,
+    `footer_stat`'s contract)."""
+    n = footer_stat(sf_dir, table)
+    if n is None or n > max_rows:
         return df
-    return df.localCheckpoint(eager=eager) if n <= max_rows else df
+    return df.localCheckpoint(eager=eager)

@@ -17,10 +17,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tracy_matdb_spark.catalog import (
+    footer_stat,
     gated_local_checkpoint,
     load,
     spread_unsplittable_scan,
-    table_num_rows,
 )
 from tracy_matdb_spark.operators import textops
 from tracy_matdb_spark.operators.graph import connected_components
@@ -498,11 +498,10 @@ def _corpus_scaled_side(df: DataFrame, sf_dir: str) -> DataFrame:
     planner's broadcast only below the docs-count gate, else pin a
     spillable sort-merge join (never a broadcast, never an in-memory
     hash build)."""
-    try:
-        n_docs = table_num_rows(sf_dir, "documents")
-    except Exception:  # noqa: BLE001 — stat unavailable -> don't broadcast
-        n_docs = 1 << 62
-    return df if n_docs <= LSH_VERIFY_BCAST_MAX_DOCS else df.hint("merge")
+    n_docs = footer_stat(sf_dir, "documents")
+    if n_docs is not None and n_docs <= LSH_VERIFY_BCAST_MAX_DOCS:
+        return df
+    return df.hint("merge")
 
 
 def _jaccard_ctes_duckdb() -> str:
@@ -962,16 +961,9 @@ def _lsh_extra_bits(sf_dir: str) -> int:
     candidate blowup; narrow-recall on a small corpus fails loudly in
     parity, quadratic candidates at 100 TB fail the cluster."""
     import math
-    import warnings
 
-    try:
-        n = table_num_rows(sf_dir, "embeddings")
-    except Exception as e:  # noqa: BLE001
-        warnings.warn(
-            f"embeddings footer stat failed under {sf_dir!r} ({e}); "
-            "assuming large corpus (max LSH band widening)",
-            stacklevel=2,
-        )
+    n = footer_stat(sf_dir, "embeddings")
+    if n is None:
         return LSH_EXTRA_BITS_MAX
     base_buckets = 1 << LSH_BAND_BITS
     if n <= LSH_TARGET_BUCKET_LOAD * base_buckets:
@@ -2235,11 +2227,8 @@ def _pq_train_bound(sf_dir: str) -> int | None:
     LARGE corpus and samples — bounded work is the conservative
     direction here (an unbounded Lloyd assignment is the measured
     disk-filling failure, sf100 probe r14)."""
-    try:
-        n = table_num_rows(sf_dir, "embeddings")
-    except Exception:  # noqa: BLE001 — stat unavailable -> assume huge
-        return PQ_TRAIN_MAX
-    return None if n <= PQ_TRAIN_MAX else PQ_TRAIN_MAX
+    n = footer_stat(sf_dir, "embeddings")
+    return None if n is not None and n <= PQ_TRAIN_MAX else PQ_TRAIN_MAX
 
 
 def _pq_body_sql(train_bound: int | None = None) -> str:

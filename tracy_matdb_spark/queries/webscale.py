@@ -27,12 +27,13 @@ equi joins only — no cartesian stages, no single-partition windows.
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from tracy_matdb_spark.catalog import load, spread_unsplittable_scan, table_num_rows
+from tracy_matdb_spark.catalog import footer_stat, load, spread_unsplittable_scan
 from tracy_matdb_spark.operators import textops
 from tracy_matdb_spark.operators.rank import grouped_value_rank
 from tracy_matdb_spark.queries import register
@@ -269,20 +270,6 @@ PR_BASE = 150_000  # (1 - 0.85) in micro units
 PR_CKPT_MAX_LINEITEM = 100_000_000  # edge-table memory-checkpoint gate
 
 
-def _pr_edge_gate_rows() -> int:
-    """Edge-materialization gate, env-overridable
-    (SPARK_GRAFT_PR_EDGE_GATE_ROWS) so tests can force the big-data
-    path — materialized co-partitioned DISK_ONLY edges — at sf0.001
-    and pin its result equal to the small-SF lazy-checkpoint shape.
-    The two branches of _pr_graph must be pure plan-shape choices,
-    never a semantics fork; the override makes that a CI invariant
-    instead of a one-off claim in a commit message."""
-    try:
-        return int(os.environ["SPARK_GRAFT_PR_EDGE_GATE_ROWS"])
-    except (KeyError, ValueError):
-        return PR_CKPT_MAX_LINEITEM
-
-
 def _pr_graph(t, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(symmetrized edge view, degree table) for the bipartite purchase
     graph. The DIRECTED half is lazily local-checkpointed so the
@@ -340,12 +327,12 @@ def _pr_graph(t, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     # written once": every iteration join then reads co-partitioned
     # cached blocks with NO exchange on the edge side and zero
     # storage-memory claim, and outdeg is ONE keyed agg over the same
-    # cache. Stat failure -> the bounded-memory path.
-    try:
-        small = table_num_rows(sf_dir, "lineitem") <= _pr_edge_gate_rows()
-    except Exception:  # noqa: BLE001 — stat unavailable -> assume huge
-        small = False
-    if small:
+    # cache. Stat failure -> the bounded-memory path. The two branches
+    # must be pure plan-shape choices, never a semantics fork: tests
+    # force the big one at smoke SF through the catalog stat and pin
+    # its result equal to the small one.
+    n_lineitem = footer_stat(sf_dir, "lineitem")
+    if n_lineitem is not None and n_lineitem <= PR_CKPT_MAX_LINEITEM:
         e0 = e0.localCheckpoint(eager=False)
         # degree from each DIRECTED half separately: outdeg(customer) =
         # its count in e0.src, outdeg(supplier) = its count in e0.dst —
@@ -362,12 +349,10 @@ def _pr_graph(t, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     from pyspark import StorageLevel
 
     sess = t["lineitem"].sparkSession
-    try:
-        nparts = int(
-            sess.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
-        )
-    except Exception:  # noqa: BLE001
-        nparts = int(sess.conf.get("spark.sql.shuffle.partitions", "200"))
+    nparts = int(
+        sess.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum", None)
+        or sess.conf.get("spark.sql.shuffle.partitions")
+    )
     e_sym = (
         e0.unionByName(e0.selectExpr("dst AS src", "src AS dst"))
         .repartition(nparts, F.col("src"))
@@ -397,20 +382,16 @@ def _pr_graph(t, sf_dir: str) -> tuple[DataFrame, DataFrame]:
 PR_BCAST_MAX_NODES = 2_000_000  # ~24 B/row -> ~48 MB, under the 64 MB cap
 
 
-def _pr_node_bound(sf_dir: str) -> int:
+def _pr_node_bound(sf_dir: str) -> float:
     """Upper bound on the node count of the purchase graph, from
     parquet FOOTER row counts of the two dimension tables whose keys
     the nodes are drawn from (custkeys ⊆ customer, suppkeys ⊆
     supplier) — an O(1) metadata read, no Spark job, no barrier. This
     is exactly the catalog stat a warehouse planner would use for the
-    broadcast decision; a failed read returns a sentinel that forces
-    the conservative (co-partitioned shuffle) path."""
-    try:
-        return table_num_rows(sf_dir, "customer") + table_num_rows(
-            sf_dir, "supplier"
-        )
-    except Exception:  # noqa: BLE001 — any stat failure -> don't broadcast
-        return 1 << 62
+    broadcast decision; an unreadable stat bounds nothing (math.inf),
+    which forces the conservative (co-partitioned shuffle) path."""
+    n = footer_stat(sf_dir, "customer", "supplier")
+    return math.inf if n is None else n
 
 
 def _pr_iter(ranks_aug: DataFrame, e_sym: DataFrame, bcast: bool) -> DataFrame:
@@ -502,7 +483,8 @@ def pagerank_iteration_telemetry(spark: SparkSession, sf_dir: str) -> dict:
     t0 = _t.time()
     _mat(e_sym)
     edges_noop_s = _t.time() - t0
-    bcast = _pr_node_bound(sf_dir) <= PR_BCAST_MAX_NODES
+    node_bound = _pr_node_bound(sf_dir)
+    bcast = node_bound <= PR_BCAST_MAX_NODES
     ranks = deg.select("node", F.lit(PR_SCALE).cast("long").alias("r"), "outdeg")
     chain = []
     for _ in range(PR_ITERS):
@@ -555,9 +537,10 @@ def pagerank_iteration_telemetry(spark: SparkSession, sf_dir: str) -> dict:
     return {
         # the broadcast-gate decision and the footer-stat bound it was
         # made from, so a cross-decade telemetry diff can say whether
-        # the PR_BCAST_MAX_NODES gate flipped between the runs
+        # the PR_BCAST_MAX_NODES gate flipped between the runs (None:
+        # the stat could not be read)
         "bcast": bcast,
-        "node_bound": _pr_node_bound(sf_dir),
+        "node_bound": None if node_bound == math.inf else node_bound,
         "total_s": round(build_s + exec_s, 3),
         # driver-visible construction cost: AQE stage materialization of
         # the e0 join+distinct forced by the lazy localCheckpoint, plus
