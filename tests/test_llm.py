@@ -282,12 +282,15 @@ def test_lsh_widened_bands_keep_high_cos_recall(spark, tmp_path, monkeypatch):
     import tracy_matdb_spark.queries.llm as llm
 
     monkeypatch.setattr(llm, "LSH_TARGET_BUCKET_LOAD", 1)
-    # i != j in every pair-difference hyperplane, all bands/bits
-    for band in range(llm.LSH_BANDS):
-        for e, expr in enumerate(llm._lsh_extra_bit_exprs(band, 16)):
-            i = (llm.LSH_BAND_BITS * band + e) % 64
+    # i != j in every pair-difference hyperplane, all bands/bits, as the
+    # SQL the bucket is built from evaluates them
+    dims = ", ".join(f"{i} AS i{e}, {j} AS j{e}" for e in range(16) for i, j in [llm._lsh_pair_dims(e)])
+    bands = spark.sql(f"SELECT band, {dims} FROM (SELECT explode(sequence(0, {llm.LSH_BANDS - 1})) AS band)")
+    for r in bands.collect():
+        for e in range(16):
+            i = (llm.LSH_BAND_BITS * r.band + e) % 64
             j = (i + 17 + 3 * e) % 64
-            assert i != j and f"element_at(embedding, {i + 1})" in expr
+            assert i != j and (r[f"i{e}"], r[f"j{e}"]) == (i, j)
 
     rng = np.random.RandomState(11)
     n = 600
@@ -313,3 +316,57 @@ def test_lsh_widened_bands_keep_high_cos_recall(spark, tmp_path, monkeypatch):
     found = set(zip(out.vec_a, out.vec_b))
     hits = sum(1 for a, b in planted if (a, b) in found or (b, a) in found)
     assert hits / len(planted) >= 0.9, f"widened recall {hits}/{len(planted)}"
+
+
+def _huge_corpus(monkeypatch):
+    """Force the LSH gate's big branch: every footer reads 2^40 rows."""
+    from tracy_matdb_spark import catalog
+
+    monkeypatch.setattr(catalog, "table_num_rows", lambda sf_dir, table: 1 << 40)
+
+
+def test_lsh_widest_bands_compile_without_codegen_fallback(spark, monkeypatch):
+    """At LSH_EXTRA_BITS_MAX every band's bucket has 8 + 16 terms. With
+    `spark.sql.codegen.fallback` off, a plan whose generated Java does not
+    compile (Janino's 64 KB method limit) fails instead of quietly
+    running interpreted, so the query must complete."""
+    import tracy_matdb_spark.queries.llm as llm
+
+    _huge_corpus(monkeypatch)
+    assert llm._lsh_extra_bits(SF_SMOKE) == llm.LSH_EXTRA_BITS_MAX
+    before = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        llm.embedding_lsh_near_dup(spark, SF_SMOKE).collect()
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", before)
+
+
+def test_lsh_widest_bands_match_oracle_on_duplicates(spark, tmp_path, monkeypatch):
+    """The forced-huge parity pass is empty at sf0.001 (16 extra bits split
+    every bucket), so this corpus holds exact duplicates, which share
+    every bucket at any width, and near duplicates. The widest branch
+    must find pairs and equal its DuckDB twin at the same width."""
+    import duckdb
+    import numpy as np
+    import pandas as pd
+
+    import tracy_matdb_spark.queries.llm as llm
+    from tools.check_parity import compare
+
+    rng = np.random.RandomState(5)
+    base = rng.randn(40, 64).astype("float32")
+    vecs = [*base, *base[:5], *(base[5:15] + 0.01 * rng.randn(10, 64).astype("float32"))]
+    pd.DataFrame(
+        {"vec_id": np.arange(len(vecs), dtype="int64"), "embedding": [v.tolist() for v in vecs],
+         "label": np.zeros(len(vecs), dtype="int32")}
+    ).to_parquet(str(tmp_path / "embeddings.parquet"), index=False)
+
+    _huge_corpus(monkeypatch)
+    assert llm._lsh_extra_bits(str(tmp_path)) == llm.LSH_EXTRA_BITS_MAX
+    got = llm.embedding_lsh_near_dup(spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{tmp_path / 'embeddings.parquet'}')")
+    want = con.execute(llm._embedding_lsh_sql_duckdb(llm.LSH_EXTRA_BITS_MAX)).df()
+    assert {(i, i + 40) for i in range(5)} <= set(zip(got.vec_a, got.vec_b))
+    assert not compare("embedding_lsh_near_dup", got, want)

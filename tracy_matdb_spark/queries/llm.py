@@ -977,50 +977,51 @@ def _lsh_extra_bits(sf_dir: str) -> int:
     )
 
 
-def _lsh_extra_bit_exprs(band: int, extra: int) -> list[str]:
-    """Pair-difference hyperplane bits widening `band`'s signature:
-    bit e is sign(x[i] - x[j]) with (i, j) drawn deterministically from
-    (band, e) — a valid random-hyperplane family (normal e_i - e_j)
-    that is linearly independent of the single-dimension base bits, so
-    the widened buckets split evenly. Cheap: two element_at per bit."""
-    exprs = []
+def _lsh_pair_dims(e: int) -> tuple[str, str]:
+    """0-based dimensions (i, j) of extra bit e, as SQL over the `band`
+    column: i = (8*band + e) % 64, j = (i + 17 + 3e) % 64 (the offset is
+    never 0 mod 64 for e <= 15, so i != j)."""
+    i = f"((band * {LSH_BAND_BITS} + {e}) % 64)"
+    return i, f"(({i} + {17 + 3 * e}) % 64)"
+
+
+def _lsh_bucket_expr(at, extra: int) -> str:
+    """One band's bucket, as SQL over the `band` column: LSH_BAND_BITS
+    dimension-sign bits plus `extra` pair-difference hyperplane bits
+    sign(x[i] - x[j]) — a valid random-hyperplane family (normal
+    e_i - e_j), linearly independent of the single-dimension base bits,
+    so the widened buckets split evenly. `at(k)` renders the dialect's
+    1-based `embedding` element k. Written once over the band column
+    (8 + extra terms) instead of unrolled per band: at
+    LSH_EXTRA_BITS_MAX the unrolled form's generated Java exceeded
+    Janino's 64 KB method limit."""
+    base = [
+        f"(CASE WHEN cast({at(f'band * {LSH_BAND_BITS} + {i + 1}')} as double) > 0"
+        f" THEN {1 << i} ELSE 0 END)"
+        for i in range(LSH_BAND_BITS)
+    ]
+    widened = []
     for e in range(extra):
-        i = (LSH_BAND_BITS * band + e) % 64
-        j = (i + 17 + 3 * e) % 64  # offset never 0 mod 64 for e <= 15
-        exprs.append(
-            f"(CASE WHEN cast(element_at(embedding, {i + 1}) as double) - "
-            f"cast(element_at(embedding, {j + 1}) as double) > 0 "
-            f"THEN {1 << (LSH_BAND_BITS + e)} ELSE 0 END)"
+        i, j = _lsh_pair_dims(e)
+        widened.append(
+            f"(CASE WHEN cast({at(f'{i} + 1')} as double) - cast({at(f'{j} + 1')} as double) > 0"
+            f" THEN {1 << (LSH_BAND_BITS + e)} ELSE 0 END)"
         )
-    return exprs
+    return " + ".join(base + widened)
 
 
 def _embedding_lsh_sql_duckdb(extra: int = 0) -> str:
     """DuckDB twin of the banded sign-LSH near-dup — the bucketing is fully
     deterministic (dimension signs), so the scale path is hash-verifiable.
 
-    ``extra`` mirrors _lsh_extra_bits: the widened pair-difference
-    hyperplane bits are the same pure-Python formula on both dialects
-    (band is a SQL column here, unrolled Python there — identical
+    ``extra`` mirrors _lsh_extra_bits: both dialects render the bucket
+    from the same _lsh_bucket_expr over a `band` column (identical
     (i, j) per (band, e)), so oracle parity holds at EVERY corpus size,
     not only where the gate is 0. The static registration keeps
     extra=0 (true at all driver SFs); tools/check_parity.py and the
     parity tests use the registered oracle_fn, which threads the live
     footer-gated count."""
-    extra_bits = [
-        f"(CASE WHEN cast(embedding[((band * {LSH_BAND_BITS} + {e}) % 64) + 1] as double)"
-        f" - cast(embedding[(((band * {LSH_BAND_BITS} + {e}) % 64) + {17 + 3 * e}) % 64 + 1] as double) > 0"
-        f" THEN {1 << (LSH_BAND_BITS + e)} ELSE 0 END)"
-        for e in range(extra)
-    ]
-    bucket = " + ".join(
-        [
-            f"(CASE WHEN cast(embedding[band * {LSH_BAND_BITS} + {i + 1}] as double) > 0"
-            f" THEN {1 << i} ELSE 0 END)"
-            for i in range(LSH_BAND_BITS)
-        ]
-        + extra_bits
-    )
+    bucket = _lsh_bucket_expr(lambda k: f"embedding[{k}]", extra)
     sim = (
         f"cast(floor(({_dot_expr('duckdb', 'a.embedding', 'b.embedding')} / (a.nrm * b.nrm))"
         f" * cast(1000000 as double)) as bigint)"
@@ -1078,25 +1079,14 @@ def _lsh_stages(spark: SparkSession, sf_dir: str):
     pairs)."""
     emb = load(spark, sf_dir, ("embeddings",))["embeddings"]
     n = emb.selectExpr("vec_id", "embedding", f"{_norm_expr('spark', 'embedding')} AS nrm")
-    extra = _lsh_extra_bits(sf_dir)
-    band_rows = []
-    for band in range(LSH_BANDS):
-        bits = " + ".join(
-            [
-                f"(CASE WHEN cast(element_at(embedding, {band * LSH_BAND_BITS + i + 1}) as double) > 0"
-                f" THEN {1 << i} ELSE 0 END)"
-                for i in range(LSH_BAND_BITS)
-            ]
-            + _lsh_extra_bit_exprs(band, extra)
-        )
-        band_rows.append(f"struct(cast({band} as int) AS band, ({bits}) AS bucket)")
+    bucket = _lsh_bucket_expr(lambda k: f"element_at(embedding, {k})", _lsh_extra_bits(sf_dir))
     # bands carry only (vec_id, band, bucket): the candidate self-join
     # shuffles narrow rows, and the cosine runs ONCE per DISTINCT pair
     # after dedupe (the old form computed the 64-dim dot per candidate
     # occurrence, up to once per shared band, before deduping)
     banded = n.selectExpr(
-        "vec_id", f"explode(array({', '.join(band_rows)})) AS bb"
-    ).selectExpr("vec_id", "bb.band AS band", "bb.bucket AS bucket")
+        "vec_id", "embedding", f"explode(sequence(0, {LSH_BANDS - 1})) AS band"
+    ).selectExpr("vec_id", "band", f"{bucket} AS bucket")
     a = banded.alias("a")
     b = banded.alias("b")
     cands = (

@@ -12,15 +12,21 @@ At cluster scale the same factory applies — only master/memory change;
 left to AQE coalescing.
 
 The `file:` scheme runs on the fork-free local filesystem in `jvm/`
-(README: Fork-free local filesystem).
+(README: Fork-free local filesystem). A JVM this factory launches starts
+from a class-data-sharing archive when one exists for its JDK and class
+path, and records one at exit when none does (`cds`, README: JVM
+class-data archive); `jvm_archive()` reports which.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import os
 
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+from tracy_matdb_spark import cds
 
 LOCALFS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "localfs.jar")
 _LOCALFS_IMPL = {
@@ -29,12 +35,26 @@ _LOCALFS_IMPL = {
 }
 
 
+_ARCHIVE = cds.Record("off", reason="get_session has not launched a JVM in this process")
+
+
+def jvm_archive() -> dict:
+    """The class-data archive of the JVM the last launching `get_session`
+    started: `state` ("mapped" | "recording" | "off"), `archive` (path)
+    and `reason` (why "off")."""
+    return dataclasses.asdict(_ARCHIVE)
+
+
+def _launches_jvm() -> bool:
+    return SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
+
+
 def _localfs_loadable() -> bool:
     """Whether the session's JVM can load the jar's classes. A JVM this
     call launches has the jar on its class path; one already running (an
     earlier session's, a pyspark shell's, spark-submit's) has only what it
     was started with, and Hadoop resolves `fs.file.impl` by name."""
-    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+    if _launches_jvm():
         return True
     SparkContext._ensure_initialized()
     conf = SparkContext._jvm.org.apache.hadoop.conf.Configuration(False)
@@ -46,6 +66,7 @@ def get_session(
     cpus: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    global _ARCHIVE
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     # must run BEFORE the JVM launches: the typed-state streaming
@@ -131,10 +152,20 @@ def get_session(
         builder = builder.config(map=_LOCALFS_IMPL)
     conf = dict(extra_conf or {})
     class_path = [LOCALFS_JAR, conf.pop("spark.driver.extraClassPath", "")]
-    builder = builder.config("spark.driver.extraClassPath", os.pathsep.join(filter(None, class_path)))
+    class_path = os.pathsep.join(filter(None, class_path))
+    builder = builder.config("spark.driver.extraClassPath", class_path)
+    launch = None
+    if _launches_jvm():
+        java_options = conf.get("spark.driver.extraJavaOptions", "")
+        launch = cds.prepare(class_path, LOCALFS_JAR, java_options)
+        conf["spark.driver.extraJavaOptions"] = " ".join(filter(None, [java_options, launch.java_options]))
     for k, v in conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    if launch is None:
+        spark = builder.getOrCreate()
+    else:
+        spark = launch.run(builder.getOrCreate)
+        _ARCHIVE = launch.record
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
