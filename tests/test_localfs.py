@@ -100,13 +100,14 @@ root, out, spec = sys.argv[1], sys.argv[2], json.loads(sys.argv[3])
 sys.path.insert(0, root)
 from pyspark.sql import types as T
 from tracy_matdb_spark.plans.pipeline import Pipeline
-from tracy_matdb_spark.session import LOCALFS_JAR, get_session
+from tracy_matdb_spark.session import LOCALFS_JAR, get_session, jvm_archive
 from tracy_matdb_spark.streaming.ingest import incremental_ingest
 
 # a caller's class path is kept, after the jar
 extra = os.path.join(out, "extra-classes")
 spark = get_session("spawn-check", cpus=2, extra_conf={"spark.driver.extraClassPath": extra})
 assert spark.sparkContext.getConf().get("spark.driver.extraClassPath") == os.pathsep.join([LOCALFS_JAR, extra])
+assert jvm_archive()["state"] == "off"  # no class-data archive for a per-run class path
 spark.range(10).write.parquet(f"{out}/table")
 schema = T.StructType([T.StructField("auid", T.StringType()), T.StructField("energy", T.DoubleType())])
 for i in range(2):
@@ -135,7 +136,12 @@ def test_file_operations_spawn_no_chmod_or_readlink(tmp_path):
         wrapper.write_text(f'#!/bin/sh\necho "{name} $*" >> {log}\nexec {shutil.which(name)} "$@"\n')
         wrapper.chmod(0o755)
     out = tmp_path / "out"
-    env = {**os.environ, "PATH": f"{bin_dir}{os.pathsep}{os.environ['PATH']}", "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    # a regular file as the cache directory: the per-run class path would
+    # record an archive under a key no later session uses
+    no_cache = tmp_path / "no-cache"
+    no_cache.write_text("")
+    env = {**os.environ, "PATH": f"{bin_dir}{os.pathsep}{os.environ['PATH']}", "SPARK_GRAFT_DRIVER_MEM": "1g",
+           "XDG_CACHE_HOME": str(no_cache)}
     proc = subprocess.run(
         [sys.executable, "-c", _SPAWN_CHILD, ROOT, str(out), json.dumps(SPEC)],
         env=env, capture_output=True, text=True, timeout=600,

@@ -47,6 +47,26 @@ def test_global_rank_is_exact(spark):
     assert list(by_hash["rk"]) == list(range(1, len(back) + 1))
 
 
+def test_hash60_helpers_match_literal_md5_vectors(spark):
+    """Engine and oracle share these helpers, so parity cannot catch an
+    error in them: pin each dialect to integers computed from md5 alone
+    (md5('42|abc') = c5d09d53985ac682..., md5('s|spark') = 87bc1e16364178cf...;
+    hash60 is the first 15 hex digits)."""
+    import duckdb
+
+    from tracy_matdb_spark.functions.prng import sql_hash60
+    from tracy_matdb_spark.operators.generators import _h60
+    from tracy_matdb_spark.operators.textops import tok_hash60
+
+    duck = duckdb.connect()
+    assert spark.range(1).select(hash60("42", "abc")).first()[0] == 890879112686972008
+    assert duck.execute("SELECT " + sql_hash60("'42|abc'")).fetchone()[0] == 890879112686972008
+    spark_sql = (tok_hash60("spark", "'spark'"), _h60("'s|spark'", "spark"))
+    duck_sql = (tok_hash60("duckdb", "'spark'"), _h60("'s|spark'", "duckdb"))
+    assert list(spark.sql(f"SELECT {', '.join(spark_sql)}").first()) == [611295348218140556] * 2
+    assert list(duck.execute(f"SELECT {', '.join(duck_sql)}").fetchone()) == [611295348218140556] * 2
+
+
 def test_aflow_dsl_string_ops(spark):
     df = spark.createDataFrame(
         [("alpha", 1.0), ("alphabet", 5.0), ("beta", 2.0)], "name string, val double"

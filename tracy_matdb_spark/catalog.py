@@ -7,7 +7,8 @@ databases/groups and a uuid registry; reference matdb/database/__init__.py:1585-
 `load` returns a dict of DataFrames; `register` additionally creates
 temp views so `spark.sql` works. Reads are plain `spark.read.parquet`
 so Catalyst gets full predicate pushdown / column pruning on every
-query that consumes them.
+query that consumes them. Writes of persistent tables go through
+`parquet_writer`.
 """
 
 from __future__ import annotations
@@ -15,7 +16,7 @@ from __future__ import annotations
 import os
 import warnings
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 
 TABLES = (
     "region",
@@ -80,6 +81,21 @@ def _relation(spark: SparkSession, path: str) -> DataFrame:
     df = spark.read.parquet(path)
     cache[os.path.realpath(path)] = (stat_key, df)
     return df
+
+
+def parquet_writer(df: DataFrame, mode: str) -> DataFrameWriter:
+    """The one writer of every parquet table the engine persists:
+    `df.write` in `mode` with zstd column chunks. Callers chain
+    `partitionBy`/`bucketBy`/`saveAsTable`/`parquet` on it.
+
+    zstd entropy-codes what Spark's default snappy cannot: md5-hex keys
+    (`uuid`, `duid`, content hashes) and small-vocabulary text. The
+    materials catalog stores about 40% fewer bytes per row (README:
+    On-disk format). The codec is set here, not in the session conf, so
+    the stored format is the same whoever built the session. Parquet
+    records the codec per column chunk, so a table whose history is
+    snappy reads together with zstd appends."""
+    return df.write.mode(mode).option("compression", "zstd")
 
 
 def load(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:

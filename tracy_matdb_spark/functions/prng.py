@@ -72,9 +72,3 @@ def sql_hash60(canon_expr: str) -> str:
 
 def sql_u01(canon_expr: str) -> str:
     return f"({sql_hash60(canon_expr)} / cast(1152921504606846976 as double))"
-
-
-def sql_gauss(canon_parts: str) -> str:
-    """canon_parts: a DuckDB expr for the '|'-joined key WITHOUT the draw index."""
-    terms = " + ".join(sql_u01(f"{canon_parts} || '|g{i}'") for i in range(12))
-    return f"({terms} - 6.0)"

@@ -16,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from tracy_matdb_spark.catalog import parquet_writer
+
 
 def write_bucketed(
     df: DataFrame,
@@ -31,7 +33,7 @@ def write_bucketed(
     table is droppable without deleting the files.
     """
     (
-        df.write.mode("overwrite")
+        parquet_writer(df, "overwrite")
         .option("path", path)
         .bucketBy(n_buckets, key)
         .sortBy(key)
@@ -53,7 +55,7 @@ def write_partitioned(df: DataFrame, path: str, *keys: str) -> None:
     files, so a one-source query over a 100 TB corpus reads only that
     source's bytes (pinned as `PartitionFilters` in tests/test_bucketing.py).
     """
-    df.write.mode("overwrite").partitionBy(*keys).parquet(path)
+    parquet_writer(df, "overwrite").partitionBy(*keys).parquet(path)
 
 
 def zorder_expr(dialect: str, x: str, y: str, bits: int = 8) -> str:
@@ -91,4 +93,4 @@ def compact_parquet_dir(
     this runs per partition-directory (so each job is bounded) and
     swaps directories atomically at the end."""
     df = spark.read.parquet(src)
-    df.repartition(target_files).write.mode("overwrite").parquet(dst)
+    parquet_writer(df.repartition(target_files), "overwrite").parquet(dst)

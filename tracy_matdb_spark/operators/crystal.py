@@ -84,14 +84,3 @@ def vegard(concs: dict[str, float]) -> float:
     """Concentration-weighted lattice parameter (data.py:30-40)."""
     total = sum(concs.values())
     return sum(LAT_PARAMS[el] * c for el, c in concs.items()) / total
-
-
-def vegard_df(spark: SparkSession, alloys: list[dict[str, float]]) -> DataFrame:
-    rows = [
-        (
-            "-".join(f"{el}{c:g}" for el, c in sorted(a.items())),
-            float(vegard(a)),
-        )
-        for a in alloys
-    ]
-    return spark.createDataFrame(rows, "alloy string, lat_param double")

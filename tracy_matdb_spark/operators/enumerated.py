@@ -475,30 +475,6 @@ def space_ops(lattice: str):
     return out
 
 
-def _stabilizer(h: tuple[int, ...], ops: list[list[list[int]]]) -> list[list[list[int]]]:
-    """Ops A with A * (M Z^3) = M Z^3, i.e. M^-1 A M integer (checked
-    exactly via adj(M) A M divisible by det)."""
-    a, b, c, d, e, f = h
-    M = [[a, 0, 0], [b, c, 0], [d, e, f]]
-    det = a * c * f
-    adj = [
-        [c * f, 0, 0],
-        [-b * f, a * f, 0],
-        [b * e - c * d, -a * e, a * c],
-    ]
-    keep = []
-    for A in ops:
-        AM = [[sum(A[i][t] * M[t][j] for t in range(3)) for j in range(3)] for i in range(3)]
-        ok = all(
-            sum(adj[i][t] * AM[t][j] for t in range(3)) % det == 0
-            for i in range(3)
-            for j in range(3)
-        )
-        if ok:
-            keep.append(A)
-    return keep
-
-
 # per-process memo: the UDFs below resolve the ops per batch, and python
 # workers are long-lived (a plain dict, not lru_cache: cloudpickle can't
 # serialize a module-level wrapper whose qualname is the wrapped fn)

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
+from tracy_matdb_spark.catalog import parquet_writer
 from tracy_matdb_spark.frames import literal_frame
 from tracy_matdb_spark.operators import generators as G
 from tracy_matdb_spark.operators.split import assign_split
@@ -154,7 +155,7 @@ class Pipeline:
             built.set_exception(e)
             raise
         group_dir = self._group_dir(database, name)
-        out.write.mode("overwrite").parquet(group_dir)
+        parquet_writer(out, "overwrite").parquet(group_dir)
         # provenance sidecar per group write (dbcat semantics,
         # matdb/utility.py:933-983)
         P.write_manifest(
@@ -174,7 +175,7 @@ class Pipeline:
             [tuple(g.values()) for g in self.groups],
             "database string, group_name string, group_type string, params_json string, trainable boolean, splittable boolean",
         )
-        groups_df.write.mode("overwrite").parquet(os.path.join(self.out_dir, "groups"))
+        parquet_writer(groups_df, "overwrite").parquet(os.path.join(self.out_dir, "groups"))
 
     def setup(self, spark: SparkSession) -> None:
         """Run every database's steps (gated, grid-expanded) and materialize
@@ -339,7 +340,7 @@ class Pipeline:
             out = part if out is None else out.unionByName(part)
         v = P.next_version(root)
         vdir = P.version_dir(root, v)
-        out.write.mode("overwrite").parquet(vdir)
+        parquet_writer(out, "overwrite").parquet(vdir)
         P.write_manifest(
             vdir,
             sources=[os.path.join(self.out_dir, "groups")],
@@ -365,7 +366,7 @@ class Pipeline:
         root = os.path.join(self.out_dir, "final")
         v = P.next_version(root)
         vdir = P.version_dir(root, v)
-        snap.write.mode("overwrite").parquet(vdir)
+        parquet_writer(snap, "overwrite").parquet(vdir)
         split_root = os.path.join(self.out_dir, "split_assignments")
         P.write_manifest(
             vdir,

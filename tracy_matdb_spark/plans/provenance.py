@@ -25,6 +25,8 @@ from uuid import uuid4
 
 from pyspark.sql import DataFrame
 
+from tracy_matdb_spark.catalog import parquet_writer
+
 ENGINE_VERSION = "tracy_matdb_spark-0.2"
 MANIFEST_NAME = "_manifest.json"
 
@@ -60,7 +62,7 @@ def dbcat(dfs: list[DataFrame], out_dir: str, sources: list[str] | None = None, 
     out = dfs[0]
     for d in dfs[1:]:
         out = out.unionByName(d)
-    out.write.mode("overwrite").parquet(out_dir)
+    parquet_writer(out, "overwrite").parquet(out_dir)
     return write_manifest(out_dir, sources=sources, **params)
 
 

@@ -36,6 +36,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from tracy_matdb_spark.catalog import parquet_writer
 from tracy_matdb_spark.sources.files import read_files
 
 try:  # h5py is optional by design — see module docstring
@@ -228,7 +229,7 @@ def atoms_h5_dir_to_parquet(
     """One-time migration: directory tree of atoms.h5 -> parquet table
     (see module docstring for the 100 TB design)."""
     df = read_atoms_h5(spark, src)
-    writer = df.write.mode("overwrite")
+    writer = parquet_writer(df, "overwrite")
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(dst)

@@ -511,11 +511,6 @@ def _ohdr_v1(msgs: list[tuple[int, bytes]]) -> bytes:
     return struct.pack("<BxHII4x", 1, len(msgs), 1, len(body)) + body
 
 
-def write_tree(path: str, tree: dict[str, Any], dialect: str = "v2", chunk_rows: int = 0) -> None:
-    with open(path, "wb") as f:
-        f.write(write_tree_bytes(tree, dialect, chunk_rows))
-
-
 # ---------------------------------------------------------------------------
 # reader
 # ---------------------------------------------------------------------------
@@ -550,11 +545,6 @@ def read_tree_bytes(data: bytes) -> dict[str, Any]:
     else:
         raise ValueError(f"unsupported superblock version {ver}")
     return _read_object(f, root)
-
-
-def read_tree(path: str) -> dict[str, Any]:
-    with open(path, "rb") as fh:
-        return read_tree_bytes(fh.read())
 
 
 def _read_messages(f: _File, addr: int) -> list[tuple[int, int, int]]:

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from tracy_matdb_spark.catalog import parquet_writer
 from tracy_matdb_spark.sources.files import Parser, parse_files
 
 _BINARY_FILE_SCHEMA = T.StructType(
@@ -75,12 +76,8 @@ def _upsert_stream(
             # anti-join is map-side — so already-seen rows never cross
             # the dedup exchange (guide §2.3, filter before shuffle)
             fresh = fresh.join(seen, keys, "left_anti")
-        (
-            fresh.dropDuplicates(keys)
-            .withColumn(stamp, F.lit(batch_id))
-            .write.mode("append")
-            .parquet(target_path)
-        )
+        out = fresh.dropDuplicates(keys).withColumn(stamp, F.lit(batch_id))
+        parquet_writer(out, "append").parquet(target_path)
 
     reader = spark.readStream.option("recursiveFileLookup", "true").option(
         "pathGlobFilter", glob
